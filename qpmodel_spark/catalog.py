@@ -94,13 +94,14 @@ def fanout(df: DataFrame) -> DataFrame:
 
 
 def _parse_bytes(v: str) -> int:
-    """Spark size-string -> bytes ('8m', '128MB', '134217728b', plain int)."""
+    """Spark size-string -> bytes ('8m', '128MB', '1.5g', '134217728b',
+    plain int)."""
     s = str(v).strip().lower()
     mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
     if len(s) > 1 and s[-1] == "b" and s[-2] in mult:
         s = s[:-1]
     if s and s[-1] in mult:
-        return int(s[:-1]) * mult[s[-1]]
+        return int(float(s[:-1]) * mult[s[-1]])
     return int(s.rstrip("b") or 0)
 
 

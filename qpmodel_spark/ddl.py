@@ -187,15 +187,16 @@ class Engine:
     def _is_empty(self, table: str) -> bool:
         """True iff the table's parquet files hold zero rows — a pure
         footer-metadata check (no Spark job; the same information a
-        manifest-based format holds per file).  Returns False on any
-        read problem, so callers fall back to the general path."""
+        manifest-based format holds per file) that stops at the first
+        file holding a row.  Returns False on any read problem, so
+        callers fall back to the general path."""
         import glob as _glob
 
         try:
             import pyarrow.parquet as _pq
 
             files = _glob.glob(f"{self._path(table)}/**/*.parquet", recursive=True)
-            return sum(_pq.ParquetFile(f).metadata.num_rows for f in files) == 0
+            return not any(_pq.ParquetFile(f).metadata.num_rows > 0 for f in files)
         except Exception:
             return False
 

@@ -155,18 +155,18 @@ def loop_shuffle_partitions(
         cores = spark.sparkContext.defaultParallelism
         p = max(p, min(cores, -(-n_rows // min_rows_per_task)))
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    # r14: in the derived-small regime (p <= core count) AQE has nothing
-    # left to do — the loop partitioning is already data-derived, there
-    # is nothing to coalesce — but it still splits every round's
-    # checkpoint action into per-exchange stage-jobs, pure scheduling.
-    # Interleaved A/Bs: er_golden_record 11.8→7.7 s / dedup_components
-    # 7.6→3.5 s (p=1; jobs 230→43 / 37→23), dedup_suffix_array_spans
-    # jobs 101→30 with AQE-off winning every interleaved pair (p=8).
-    # At cluster scale the derived p exceeds the core count and AQE
-    # stays on (runtime coalescing + skew handling matter there).
+    # In the derived-small regime (p <= core count) AQE has nothing left
+    # to do — the loop partitioning is already data-derived, there is
+    # nothing to coalesce — but it still splits every round's checkpoint
+    # action into per-exchange stage-jobs, pure scheduling.  Interleaved
+    # A/Bs: er_golden_record 11.8→7.7 s / dedup_components 7.6→3.5 s
+    # (p=1; jobs 230→43 / 37→23), dedup_suffix_array_spans jobs 101→30
+    # with AQE-off winning every interleaved pair (p=8).  At cluster
+    # scale the derived p exceeds the core count and AQE stays on
+    # (runtime coalescing + skew handling matter there).
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    if _LOOP_AQE_OFF and p <= spark.sparkContext.defaultParallelism:
+    if p <= spark.sparkContext.defaultParallelism:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         yield p
@@ -174,10 +174,6 @@ def loop_shuffle_partitions(
         spark.conf.set("spark.sql.shuffle.partitions", old)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
-
-# single-partition loops drop AQE's per-exchange stage-job scheduling
-# (see min_label_components); module flag so the A/B is togglable in-session
-_LOOP_AQE_OFF = True
 
 
 def min_label_components(
@@ -204,23 +200,27 @@ def min_label_components(
     (the jump's effective gain on that bipartite cluster shape is far
     below squaring) — the old cap of 20 had one round of headroom.
 
-    r13: the edge frame is materialized HERE (callers hand in a derived
+    The edge frame is materialized HERE (callers hand in a derived
     union/distinct subtree that every round would otherwise re-execute,
-    guide §5), and the loop runs at a shuffle-partition count derived from
-    the measured edge count (~2M edge rows ≈ 50 MB per partition, guide
-    §2.2) — component frames are a few longs per row, so at sf0.1 the
-    loop is scheduling-bound (≈6 AQE stage-jobs per round at the session's
-    200 partitions) and collapses to 1 partition, while at cluster scale
-    the count grows the partitioning back and AQE keeps coalescing.
-    Measured on er_golden_record's 22.7k-edge graph: 5.96 s → 4.29 s for
-    the loop alone; disabling AQE instead measured 16 s (200-partition
-    rounds with no coalescing) — keep AQE on.
+    guide §5), and the loop runs under ``loop_shuffle_partitions`` at a
+    shuffle-partition count derived from the measured edge count (~2M
+    edge rows ≈ 50 MB per partition, guide §2.2).  Component frames are a
+    few longs per row, so at sf0.1 the loop is scheduling-bound (≈6 AQE
+    stage-jobs per round at the session's 200 partitions) and collapses
+    to 1 partition, while at cluster scale the count grows the
+    partitioning back.  AQE is turned off for the rounds only when that
+    derived count is at most the core count: there is nothing left to
+    coalesce, and AQE would only add per-exchange stage-jobs.  Above the
+    core count AQE stays on — turning it off while the loop still ran at
+    the session's 200 partitions measured 16 s vs 4.29 s on
+    er_golden_record's 22.7k-edge graph (200-partition rounds with no
+    coalescing).  Deriving the count alone took that loop 5.96 s → 4.29 s.
     """
     spark = edges.sparkSession
     edges = edges.localCheckpoint(eager=True)
     n_edges = edges.count()  # count of a materialized RDD — cheap
     with loop_shuffle_partitions(spark, n_edges) as p:
-        # p == 1 also turns AQE off for the rounds (see the helper's note)
+        # p <= core count also turns AQE off for the rounds (see the helper)
         edges = edges.repartition(p, "src").localCheckpoint(eager=True)
         return _min_label_rounds(edges, node_col, max_rounds, caller)
 
@@ -231,22 +231,21 @@ def _min_label_rounds(
     """The propagation loop of min_label_components (split out so the
     shuffle-partition override wraps exactly the rounds).
 
-    Convergence check (r13): labels are strictly monotone non-increasing —
-    the self-loops put a node's own label among the one-hop candidates, and
+    Convergence check: labels are strictly monotone non-increasing — the
+    self-loops put a node's own label among the one-hop candidates, and
     the shortcut is `least`-capped — so the per-round label SUM decreases
-    iff any label moved.  Comparing that scalar between rounds replaces the
-    old-vs-new compare JOIN the previous version carried inside every
-    round's checkpointed frame (one join fewer per round, times 19 rounds
-    on the er link graph; measured 5.21 s -> 4.23 s for the loop).  The
-    sum is exact decimal(38,0): ids are node numbers, so bigint overflow
-    would need ~1e18 nodes of ~1e18 ids; decimal holds to 1e38.
+    iff any label moved.  Comparing that scalar between rounds avoids an
+    old-vs-new compare JOIN inside every round's checkpointed frame (one
+    join fewer per round, times 19 rounds on the er link graph; measured
+    5.21 s -> 4.23 s for the loop).  The sum is exact decimal(38,0): ids
+    are node numbers, so bigint overflow would need ~1e18 nodes of ~1e18
+    ids; decimal holds to 1e38.
 
-    r14 (judge r13 item #8): the sum now rides the round's OWN
-    materialization action via ``df.observe`` — the accumulator is
-    collected during the eager localCheckpoint, so the convergence check
-    costs ZERO extra Spark actions (the r13 form ran a separate agg job
-    per round, ~19 extra actions on the er link graph).  Values are
-    identical: the observed metric is the same exact decimal sum over
+    The sum rides the round's OWN materialization action via
+    ``df.observe`` — the accumulator is collected during the eager
+    localCheckpoint, so the convergence check costs ZERO extra Spark
+    actions (a separate agg job per round would add ~19 actions on the er
+    link graph).  The observed metric is the same exact decimal sum over
     the same materialized rows.
     """
     from pyspark.sql import Observation

@@ -1244,11 +1244,6 @@ def _span_corpus(docs: DataFrame) -> DataFrame:
 # suffix order.  Saves 4 of 8 rank rounds vs ranking from width 1.
 _SPAN_BASE_K = 4  # first ranked level: width 2^4 = 16
 
-# eager-vs-lazy materialization knobs for the ladder/descend lineage cuts
-# (r14 barrier-budget experiment; see OPTIMIZATION_r14.md)
-_SPAN_EAGER_DESCEND = True
-_SPAN_EAGER_LADDER = True
-
 
 def _suffix_levels(corpus: DataFrame, k_max: int):
     """Suffix rank ladder, returned as (base, ranks):
@@ -1259,20 +1254,18 @@ def _suffix_levels(corpus: DataFrame, k_max: int):
       frames for k = _SPAN_BASE_K..k_max (r_k = dense rank of the suffix
       truncated at 2^k words, order-preserving; block comment step 1).
 
-    r13 optimization: the ladder used to accumulate every rank column AND
-    the four gram strings in one wide frame, so each doubling round's
-    range exchange, window sort and checkpoint moved ~hundreds of bytes
-    per row of strings it never looked at.  The rank recursion only needs
-    (doc_id, pos, previous rank), so the rounds now run on slim int-only
-    frames (slen rides along — one int — because the class summary needs
-    it); the gram strings are materialized once in ``base`` and read only
-    by the boundary descend's width-<16 levels.  Measured at sf0.1:
-    49.6 s -> see OPTIMIZATION_r13.md.
+    The rank recursion only needs (doc_id, pos, previous rank), so the
+    rounds run on slim int-only frames (slen rides along — one int —
+    because the class summary needs it); the gram strings are
+    materialized once in ``base`` and read only by the boundary descend's
+    width-<16 levels.  Carrying every rank column and the four gram
+    strings in one wide frame made each doubling round's range exchange,
+    window sort and checkpoint move ~hundreds of bytes per row of strings
+    it never looked at (measured at sf0.1, see OPTIMIZATION_r13.md).
 
-    r13 negative result (kept so round 14 doesn't re-try it): hash-
-    repartitioning each checkpointed frame on (doc_id, pos) so the
-    descend's 16 lookup joins and the ladder's neighbor joins reuse one
-    layout (guide §2.4) does NOT work under AQE in Spark 4.1 — an
+    Do not hash-repartition each checkpointed frame on (doc_id, pos) so
+    the descend's 16 lookup joins and the ladder's neighbor joins reuse
+    one layout (guide §2.4): it does NOT work under AQE in Spark 4.1 — an
     un-finalized AdaptiveSparkPlan reports UnknownPartitioning, so
     Dataset.localCheckpoint captures no outputPartitioning and every
     consumer re-shuffles anyway; the added exchanges measured as pure
@@ -1301,7 +1294,7 @@ def _suffix_levels(corpus: DataFrame, k_max: int):
         "_g.g2",
         "_g.g4",
         "_g.g8",
-    ).localCheckpoint(eager=_SPAN_EAGER_LADDER)
+    ).localCheckpoint(eager=True)
     g8s = toks.select("doc_id", "pos", "slen", "g8")
     nbr8 = g8s.select(
         "doc_id", (F.col("pos") - 8).alias("pos"), F.col("g8").alias("_nb")
@@ -1315,7 +1308,7 @@ def _suffix_levels(corpus: DataFrame, k_max: int):
         # each level frame is read twice (as itself and as its own width-
         # shifted neighbor) plus by the descend; cut lineage so no reader
         # replays the rank machinery
-        .localCheckpoint(eager=_SPAN_EAGER_LADDER)
+        .localCheckpoint(eager=True)
     )
     ranks = {_SPAN_BASE_K: lv}
     for k in range(_SPAN_BASE_K, k_max):
@@ -1332,7 +1325,7 @@ def _suffix_levels(corpus: DataFrame, k_max: int):
         ranks[k + 1] = (
             two_phase_dense_rank(cur, [f"r{k}", "_nb"], f"r{k + 1}")
             .select("doc_id", "pos", "slen", f"r{k + 1}")
-            .localCheckpoint(eager=_SPAN_EAGER_LADDER)
+            .localCheckpoint(eager=True)
         )
     return toks, ranks
 
@@ -1410,7 +1403,7 @@ def _boundary_lcps(base: DataFrame, ranks: dict, cls: DataFrame, k_max: int) -> 
         if k % 3 == 0:
             # lineage cut every third level: the 2(K+1)-join chain stays
             # plannable without paying an eager materialization per level
-            fr = fr.localCheckpoint(eager=_SPAN_EAGER_DESCEND)
+            fr = fr.localCheckpoint(eager=True)
     return fr.select("rk", "lcp", "nda", "d0a", "ndb", "d0b")
 
 

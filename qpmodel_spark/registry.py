@@ -12,7 +12,9 @@ extensions) is registered here as a :class:`QuerySpec`:
 
 ``__spark_entry__.py``, ``tests/`` and ``bench.py`` all iterate this one
 registry, so a query is "done" exactly when it's registered with an oracle
-and green.
+and green.  Like a catalog, it is a plain name -> definition map: every
+accessor returns entries in registration order (``_QUERY_MODULES`` order,
+then declaration order within a module) and reads nothing but the modules.
 
 Hash-stability discipline (see SURVEY.md §7 watch list): the driver compares
 Spark vs DuckDB by order-insensitive value hash with columns sorted by name,
@@ -31,10 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 SparkFn = Callable[[SparkSession, str], DataFrame]
 
-# Modules that register queries on import.  Registration order doubles as
-# driver-verification priority among not-yet-verified entries (see
-# ordered_specs): SURVEY §2 surface first (relational, asof, stream windows),
-# then the pipeline operators, then the TPC-DS/JOB shape suites.
+# Modules that register queries on import, in the order every accessor
+# returns them: the SURVEY §2 surface first (relational, asof, stream
+# windows), then the pipeline operators built on it, then the TPC-DS/JOB
+# shape suites — so a consumer that checks only a prefix of the registry
+# covers the engine's core contract first.
 _QUERY_MODULES = [
     "qpmodel_spark.queries.tpch",
     "qpmodel_spark.queries.relational",
@@ -161,278 +164,9 @@ def get(name: str) -> QuerySpec:
     return _REGISTRY[name]
 
 
-def _driver_verified() -> set[str]:
-    """Names already green in a committed CORRECTNESS_r*.json.
-
-    The round driver verifies the registry in iteration order but covers
-    only a bounded prefix per round (r01 recorded exactly the first 50 of
-    122).  Ordering already-proven entries last makes each round's budget
-    land on queries with no driver-side evidence yet — across rounds this
-    converges to full driver coverage without dropping anything from the
-    registry.
-    """
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    out: set[str] = set()
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            data = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict) or row.get("err"):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-            ):
-                out.add(name)
-    return out
-
-
-# Round-7 freeze: the EXACT 81-entry order the round-6 close left behind
-# (registry minus the r01-r06 green union, in the ordered_specs() sequence
-# the judge audited).  The driver verifies the first 50 in r07 and the last
-# 31 in r08; freezing the ORDER — not just the membership — guarantees that
-# nothing registered in round 7+ can displace or reshuffle the drain plan.
-_R07_ORDER = (
-    "op_scd2_intervals",
-    "op_changepoint_mean_shift",
-    "op_max_concurrency",
-    "op_frequent_paths",
-    "op_seasonal_decompose",
-    "op_holt_forecast",
-    "op_sliding_distinct",
-    "op_winsorize",
-    "op_gains_deciles",
-    "op_spatial_grid_join",
-    "op_spatial_density",
-    "op_cms_heavy_hitters",
-    "op_bloom_membership",
-    "op_market_basket",
-    "op_fifo_allocation",
-    "op_kcore_peel",
-    "er_match_score",
-    "stream_dedup",
-    "pipeline_line_dedup",
-    "dedup_eval_pr",
-    "sim_eval_rank_metrics",
-    "pipeline_feature_hash",
-    "text_readability",
-    "text_word_entropy",
-    "pipeline_doc_features",
-    "pipeline_bpe_tokenize",
-    "text_pmi_collocations",
-    "text_unicode_normalize",
-    "mm_audio_energy",
-    "mm_scene_change",
-    "mm_phash_dedup",
-    "pipeline_sample_exact_n",
-    "pipeline_token_budget",
-    "pipeline_cross_source_overlap",
-    "pipeline_snapshot_diff",
-    "pipeline_incremental_build",
-    "pipeline_release_pass",
-    "q18_bucketed",
-    "rel_merge_upsert",
-    "op_asof_nearest",
-    "op_funnel_timebound",
-    "op_decay_sum",
-    "op_benford_test",
-    "op_ohlc_bars",
-    "op_kmv_distinct",
-    "op_rolling_bands",
-    "op_cumulative_distinct",
-    "op_eventual_pairs",
-    "op_triangle_support2",
-    "op_pagerank_support2",
-    "op_graph_bfs",
-    "op_autocorrelation",
-    "op_bootstrap_ci",
-    "op_permutation_test",
-    "op_forecast_backtest",
-    "op_churn_hazard",
-    "op_diff_in_diff",
-    "op_uplift_deciles",
-    "er_golden_record",
-    "er_match_blocked",
-    "stream_sliding_distinct",
-    "stream_interval_join",
-    "stream_ewma",
-    "stream_cdc_upsert",
-    "stream_user_stats",
-    "stream_session_live",
-    "stream_hop_live",
-    "stream_restart_resume",
-    "dedup_containment",
-    "dedup_jaccard_prefix",
-    "sim_rrf_fusion",
-    "pipeline_pca_power",
-    "pipeline_embedding_outliers",
-    "text_inverted_index",
-    "text_ngram_novelty",
-    "mm_resize",
-    "pipeline_k_anonymity",
-    "ds_q36_rank_within_rollup",
-    "ds_q44_best_worst_paired",
-    "ds_q31_growth_compare",
-    "ds_q78_returns_ratio",
-)
-_R07_RANK = {n: i for i, n in enumerate(_R07_ORDER)}
-
-# Round-8 adjustment (r07 verdict, next-round item #2): op_graph_bfs costs
-# ~13s under the plain driver session — the judge asked for it MID-slice so
-# a driver timeout can't strand the streaming block behind it.  Its frozen
-# rank (50) put it FIRST in the r08 remainder, directly ahead of the eight
-# real-run streaming entries (ranks 59-67); re-rank it to just after
-# stream_restart_resume.  This is the only deviation from the frozen order,
-# and it is judge-directed.
-_R08_RANK_OVERRIDE = {"op_graph_bfs": _R07_RANK["stream_restart_resume"] + 0.5}
-
-# Round-8 registrations queue behind EVERYTHING already pending: the r7
-# close froze the registry at 437 precisely so the driver drain completes
-# in r08 (50) + r09 (49); r09 then has exactly one spare slot, which the
-# single new entry below fills without displacing any frozen-backlog name.
-_R08_APPENDED = frozenset({"rel_copy_from_census"})
-
-# Per-round appended tiers, each ONE ordered tuple (review r11: the
-# earlier frozenset + hand-numbered rank-dict pairs could drift and needed
-# an import-time guard; deriving both from the tuple makes drift
-# impossible by construction).  Drain order within each tier: batch
-# entries first, streaming last (judge r09 item #1 — a driver timeout on
-# the stateful-streaming harness must never strand a cheap batch proof).
-#
-# r09: post-drain exceed wave (judge r08 item #7), queued behind the
-#      ENTIRE frozen backlog incl. rel_copy_from_census; drained in r10.
-# r10: post-drain exceed wave; ALSO drained by the r10 driver itself
-#      (CORRECTNESS_r10.json, every row green → 447/447 union complete).
-# r11: exceed wave (judge r10 items #1/#4/#5/#7); DRAINED by the r11
-#      driver (CORRECTNESS_r11.json all 10 green → 457/457 union, pending
-#      set empty entering r12).
-# r12: exceed wave (judge r11 items #5/#6); DRAINED by the r12 driver
-#      (CORRECTNESS_r12.json all 6 green → 463/463 union, pending set
-#      empty entering r13).
-_R09_ORDER = (
-    "dedup_bloom_decontaminate",
-    "dedup_fuzzy_decontaminate_bloom",
-    "pipeline_dsir_select",
-    "stream_continuous_aggregate",
-    "stream_session_timeout",
-)
-_R10_ORDER = (
-    "dedup_bloom_incremental",
-    "sim_ivf_multiprobe_recall",
-    "stream_bloom_maintain",
-    "stream_kill_resume",
-)
-_R11_ORDER = (
-    "op_lorenz_curve",
-    "sim_opq_adc_recall",
-    "job_cycle_redundant_edges",
-    "job_cycle_two_orders_one_part",
-    "job_hub10_predicate_mix",
-    "job_repeated_dim_alias",
-    "pipeline_pack_nextfit",
-    "pipeline_pack_ffd_recipe",
-    "op_ks_drift",
-    "stream_dsir_maintain",
-)
-_R12_ORDER = (
-    "op_revenue_pacing",
-    "job_20a_complete_cast10",
-    "job_29a_clique17",
-    "pipeline_dp_release",
-    "op_cusum_drawdown",
-    "stream_topk_maintain",
-)
-# r13: exceed wave (judge r12 items #3/#6/#7) — suffix-array substring
-# dedup with exact span lengths, A-ES weighted reservoir sampling, and
-# the idempotent-merge HLL MV — plus a second wave: the third real
-# jobench port (22c: 4-fact clique with fact-side selectivity and the
-# `<>` dim predicate, 11 relations so DP reorder actually fires) and the
-# SCD2 streaming MV (idempotent-by-reconstruction merge, the third merge
-# character in the MV taxonomy).  Batch first, streaming last per the
-# standing drain discipline.
-_R13_ORDER = (
-    "dedup_suffix_array_spans",
-    "pipeline_reservoir_sample",
-    "job_22c_western_violent11",
-    "sim_bitext_margin",
-    "er_em_weights",
-    "stream_hll_maintain",
-    "stream_scd2_maintain",
-    "stream_delta_join_maintain",
-)
-
-# Ranks derived as i / len(order) so they stay in [0, 1) for ANY tier
-# size (advice r11: i/10 silently overflowed into the next tier's +1
-# base once a tier grew past 10 names — _R11_ORDER sits at exactly 10).
-def _drain_rank(order: tuple) -> dict:
-    return {n: i / max(len(order), 1) for i, n in enumerate(order)}
-
-
-_R09_DRAIN_RANK = _drain_rank(_R09_ORDER)
-_R10_DRAIN_RANK = _drain_rank(_R10_ORDER)
-_R11_DRAIN_RANK = _drain_rank(_R11_ORDER)
-_R12_DRAIN_RANK = _drain_rank(_R12_ORDER)
-_R13_DRAIN_RANK = _drain_rank(_R13_ORDER)
-_R09_APPENDED = frozenset(_R09_ORDER)
-_R10_APPENDED = frozenset(_R10_ORDER)
-_R11_APPENDED = frozenset(_R11_ORDER)
-_R12_APPENDED = frozenset(_R12_ORDER)
-_R13_APPENDED = frozenset(_R13_ORDER)
-
-
-def _unverified_tier(name: str) -> float:
-    # Round-7 tiering: the frozen drain order above is absolute — every
-    # name on it sorts by its frozen rank; entries registered in round 7+
-    # queue strictly behind ALL of it (rank len(_R07_ORDER), stable-sorted
-    # by registration order via the ordered_specs tiebreak), and round-8 /
-    # round-9 registrations behind those in turn.
-    if name in _R13_APPENDED:
-        return len(_R07_ORDER) + 6 + _R13_DRAIN_RANK[name]
-    if name in _R12_APPENDED:
-        return len(_R07_ORDER) + 5 + _R12_DRAIN_RANK[name]
-    if name in _R11_APPENDED:
-        return len(_R07_ORDER) + 4 + _R11_DRAIN_RANK[name]
-    if name in _R10_APPENDED:
-        return len(_R07_ORDER) + 3 + _R10_DRAIN_RANK[name]
-    if name in _R09_APPENDED:
-        return len(_R07_ORDER) + 2 + _R09_DRAIN_RANK[name]
-    if name in _R08_APPENDED:
-        return len(_R07_ORDER) + 1
-    return _R08_RANK_OVERRIDE.get(name, _R07_RANK.get(name, len(_R07_ORDER)))
-
-
-def ordered_specs() -> dict[str, QuerySpec]:
-    """Registry with driver-unverified entries first, highest-value first.
-
-    Sort key: already-driver-verified entries last; among unverified ones,
-    the long-pending ds_/job_/rel_ backlog first (see _unverified_tier),
-    oracled entries before rows-only ones within a tier (a budget slot spent
-    on a no-oracle entry only buys the weaker check), registration order as
-    the stable tiebreak.
-    """
-    specs = all_specs()
-    verified = _driver_verified()
-    items = sorted(
-        enumerate(specs.items()),
-        key=lambda t: (
-            t[1][0] in verified,
-            _unverified_tier(t[1][0]),
-            t[1][1].oracle is None,
-            t[0],
-        ),
-    )
-    return dict(kv for _, kv in items)
-
-
 def queries() -> dict[str, SparkFn]:
-    return {n: s.spark_fn for n, s in ordered_specs().items()}
+    return {n: s.spark_fn for n, s in all_specs().items()}
 
 
 def oracles() -> dict[str, str]:
-    return {n: s.oracle for n, s in ordered_specs().items() if s.oracle is not None}
+    return {n: s.oracle for n, s in all_specs().items() if s.oracle is not None}

@@ -39,6 +39,10 @@ def run_bench(tree: str, tag: str) -> dict:
         text=True,
         timeout=1800,
     )
+    if out.returncode != 0:
+        raise RuntimeError(
+            f"bench.py in {tree} exited {out.returncode}:\n{out.stderr}"
+        )
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
     parsed = json.loads(line)
     detail_path = os.path.join(tree, parsed["detail"])
@@ -87,7 +91,11 @@ def main() -> None:
     import math
 
     ratios = [a[k] / b[k] for k in common if a[k] > 0 and b[k] > 0]
-    geomean = round(math.exp(sum(math.log(r) for r in ratios) / len(ratios)), 4)
+    geomean = (
+        round(math.exp(sum(math.log(r) for r in ratios) / len(ratios)), 4)
+        if ratios
+        else None  # no entry timed > 0 on both arms
+    )
     artifact = {
         "description": "interleaved two-tree bench A/B: r13-close (c0f8065) vs r14-close, alternating full bench runs, min per arm",
         "run_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),

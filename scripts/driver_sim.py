@@ -4,13 +4,12 @@
 Runs each registry entry's Spark query and DuckDB oracle at sf0.01 and
 compares them the way the driver does — ``toPandas()`` / ``.df()``,
 columns sorted by name, ``sort_values`` over ALL columns (this is the
-step that dies on array cells — CORRECTNESS_r02), cells normalized
-(floats rounded), then row-multiset equality.
+step that dies on array cells), cells normalized (floats rounded), then
+row-multiset equality.
 
 Usage:
     python scripts/driver_sim.py                 # all entries
     python scripts/driver_sim.py name1 name2 ... # subset
-    QPSPARK_SIM_ONLY_UNVERIFIED=1 python scripts/driver_sim.py
 """
 
 from __future__ import annotations
@@ -41,8 +40,8 @@ def _canon(df: pd.DataFrame) -> list[tuple]:
     Cells are TYPE-TAGGED: the driver's value-hash is dtype-sensitive, so an
     int64 Spark column vs a DuckDB HUGEINT (which lands in pandas as float64
     — e.g. window ``sum(bigint)``) must MISMATCH here even though Python's
-    ``1 == 1.0``. CORRECTNESS_r03's ``pipeline_pack`` red row was exactly
-    this class; tag ints 'i' and floats 'f' so the local sim catches it."""
+    ``1 == 1.0`` (``pipeline_pack`` once mismatched on exactly this
+    class); tag ints 'i' and floats 'f' so the local sim catches it."""
     df = df[sorted(df.columns)]
     df = df.sort_values(by=list(df.columns))  # <- dies on unhashable cells
     out = []
@@ -84,12 +83,9 @@ def _canon(df: pd.DataFrame) -> list[tuple]:
 
 def main() -> None:
     only = set(sys.argv[1:])
-    specs = registry.ordered_specs()
+    specs = registry.all_specs()
     if only:
         specs = {n: s for n, s in specs.items() if n in only}
-    elif os.environ.get("QPSPARK_SIM_ONLY_UNVERIFIED"):
-        verified = registry._driver_verified()
-        specs = {n: s for n, s in specs.items() if n not in verified}
 
     if os.environ.get("QPSPARK_SIM_PLAIN"):
         # the real driver's conditions: bare session, default 200 shuffle

@@ -118,7 +118,7 @@ def main() -> None:
     args = ap.parse_args()
 
     state = load_state()
-    all_names = list(registry.ordered_specs())
+    all_names = list(registry.all_specs())
     todo = [
         n
         for n in all_names

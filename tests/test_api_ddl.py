@@ -633,6 +633,27 @@ def test_merge_into_append_fast_paths(spark, tmp_path):
     eng.drop_table("fp")
 
 
+def test_is_empty_stops_at_first_nonempty_footer(spark, tmp_path, monkeypatch):
+    """The append-safe MERGE emptiness check reads footers only until one
+    holds a row: a non-empty two-file table costs exactly one footer read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    (tmp_path / "two").mkdir()
+    for i in range(2):
+        pq.write_table(pa.table({"id": [i]}), str(tmp_path / "two" / f"part-{i}.parquet"))
+    reads = []
+    real = pq.ParquetFile
+
+    def counting(*a, **kw):
+        reads.append(a[0])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    assert Engine(spark, str(tmp_path))._is_empty("two") is False
+    assert len(reads) == 1
+
+
 def test_merge_into_type_mismatch_falls_back(spark, tmp_path):
     """A source column typed differently from the target must take the
     full-outer path (its when/otherwise coercion is the documented
@@ -682,3 +703,5 @@ def test_fanout_bytes_parser():
     assert _parse_bytes("134217728b") == 134217728
     assert _parse_bytes("134217728") == 134217728
     assert _parse_bytes("64k") == 64 << 10
+    assert _parse_bytes("1.5g") == 3 << 29
+    assert _parse_bytes("0.5m") == 1 << 19

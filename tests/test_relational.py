@@ -45,3 +45,22 @@ def test_sys_observed_profile_matches_oracle(spark, duck):
     df.observe actuals + plan_summary scan count vs the DuckDB-stated data
     properties."""
     assert_matches_oracle(spark, duck, registry.get("sys_observed_profile"))
+
+
+def test_asof_partitions_unknown_size_uses_session_parallelism(spark, monkeypatch):
+    """An input whose footers cannot be read (object-store URI) has an
+    unknown row count; the pandas as-of join must then run at the
+    session's shuffle partitions, never collapse onto one task."""
+    from pyspark.sql import DataFrame
+
+    from qpmodel_spark.queries.asof import _asof_partitions
+
+    monkeypatch.setattr(
+        DataFrame, "inputFiles", lambda self: ["s3a://bucket/events.parquet"]
+    )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "24")
+    try:
+        assert _asof_partitions(spark, spark.range(10)) == 24
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
