@@ -86,7 +86,7 @@ def read_jsonl_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
     as an unbounded source (each new file = a micro-batch), same declared
     schema + corrupt-line capture.  This is the ingest edge of a streaming
     corpus pipeline: compose with dedup_stream / windowed aggregates /
-    run_stream_to_parquet downstream.
+    run_windowed_stream downstream.
     """
     raw = spark.readStream.format("text").load(path)
     parsed = raw.select(

@@ -213,29 +213,18 @@ def stream_cdc_upsert_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from pyspark.sql import functions as F
-
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.queries._util import msum
     from qpmodel_spark.streaming.stream_runner import (
         read_events_stream_batched,
         run_stream_upsert,
+        user_totals,
     )
 
     tmp = tempfile.mkdtemp(prefix="qp_cdc_")
     table = f"cdc_user_totals_{uuid.uuid4().hex[:8]}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(table, "user_id BIGINT, n BIGINT, sv DOUBLE")
-    totals = (
-        read_events_stream_batched(spark, sf_dir, n_files=2)
-        .groupBy("user_id")
-        .agg(F.count("*").cast("bigint").alias("n"), msum(F.col("value")).alias("sv"))
-        # the per-batch MERGE source is a ~150-key aggregate; collapsing it
-        # to one partition keeps each copy-on-write rewrite from fanning out
-        # across the session's full shuffle-partition count (wall-clock
-        # hygiene only — the MERGE plan is unchanged)
-        .coalesce(1)
-    )
+    totals = user_totals(read_events_stream_batched(spark, sf_dir, n_files=2))
     out = run_stream_upsert(
         spark, totals, eng, table, "user_id", ["n", "sv"], f"{tmp}/ckpt"
     )
@@ -287,9 +276,9 @@ def stream_user_stats_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield pd.DataFrame({"user_id": [key[0]], "n": [n], "sv": [sv]})
 
     stream = (
-        # r14 trigger batching: 4 -> 3 staged files — per-key state still
-        # crosses two micro-batch boundaries (the witnessed property),
-        # one whole trigger + state-store round cheaper per run
+        # 3 staged files: per-key state crosses two micro-batch boundaries
+        # (the witnessed property); each further file is one more trigger
+        # + state-store round per run
         read_events_stream_batched(spark, sf_dir, n_files=3)
         .select("user_id", "value")
         .groupBy("user_id")
@@ -433,14 +422,13 @@ def stream_restart_resume_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from pyspark.sql import functions as F
-
     from qpmodel_spark.catalog import normalize_events_ts, table_path
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.queries._util import msum
     from qpmodel_spark.streaming.stream_runner import (
         _events_schema,
+        file_batches,
         run_stream_upsert,
+        user_totals,
     )
 
     tmp = tempfile.mkdtemp(prefix="qp_restart_")
@@ -459,21 +447,9 @@ def stream_restart_resume_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(table, "user_id BIGINT, n BIGINT, sv DOUBLE")
 
+    totals = user_totals(normalize_events_ts(file_batches(spark, schema, src)))
+
     def one_life() -> DataFrame:
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        totals = (
-            normalize_events_ts(raw)
-            .groupBy("user_id")
-            .agg(
-                F.count("*").cast("bigint").alias("n"),
-                msum(F.col("value")).alias("sv"),
-            )
-            .coalesce(1)
-        )
         return run_stream_upsert(
             spark, totals, eng, table, "user_id", ["n", "sv"], ckpt
         )
@@ -507,7 +483,7 @@ GROUP BY event_type, CAST(ts AS DATE)
 )
 def stream_continuous_aggregate_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming continuous-aggregate refresh, run for real — the streaming
-    twin of op_continuous_aggregate (judge r08 item #7): events stream in
+    twin of op_continuous_aggregate: events stream in
     micro-batches through an UPDATE-mode hourly rollup whose changed rows
     foreachBatch-MERGE into a materialized hourly MV table; the daily
     report is then answered FROM the converged MV, never from raw events.
@@ -646,13 +622,12 @@ def stream_session_timeout_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly beyond reference parity.
     """
     import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
     from qpmodel_spark.streaming.stream_runner import (
-        _pinned_state_partitions,
         read_events_stream_sentinel_batched,
+        run_windowed_stream,
         session_timeout_stream,
     )
 
@@ -669,21 +644,10 @@ def stream_session_timeout_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = session_timeout_stream(ev, _SESS_GAP_US).where(
         F.col("user_id") >= 0
     )
-    name = f"sess_timeout_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="qp_sess_timeout_ckpt_")
-    with _pinned_state_partitions(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return run_windowed_stream(
+        spark, sessions, "append",
+        checkpoint=tempfile.mkdtemp(prefix="qp_sess_timeout_ckpt_"),
+    )
 
 
 @register(
@@ -692,7 +656,7 @@ def stream_session_timeout_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_STREAM_CDC_ORACLE,
 )
 def stream_kill_resume_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpoint CRASH-recovery, run for real (judge r09 item #5) — the
+    """Checkpoint CRASH-recovery, run for real — the
     stronger sibling of stream_restart_resume (graceful stop between
     lives): here life 1 is KILLED by an injected failure AFTER a
     micro-batch's MERGE executed but BEFORE that batch committed to the
@@ -781,16 +745,15 @@ def stream_bloom_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_gram_expr,
         bloom_pack_words,
     )
-    from qpmodel_spark.streaming.stream_runner import _pinned_state_partitions
+    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
 
     tmp = tempfile.mkdtemp(prefix="qp_bloom_mv_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
     bench = (
         spark.read.parquet(table_path(sf_dir, "documents"))
         .where(F.col("doc_id") % 10 == 3)
         .select("doc_id", "text")
     )
-    bench.repartition(2).write.mode("overwrite").parquet(src)
+    raw = stage_stream(spark, bench, 2, f"{tmp}/src")
     table = f"bloom_gate_{uuid.uuid4().hex[:8]}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(table, "word_idx BIGINT, wv BIGINT")
@@ -816,22 +779,9 @@ def stream_bloom_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
             source_unique=True,
         )
 
-    with _pinned_state_partitions(spark):
-        raw = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            raw.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_windowed_stream(
+        spark, raw, "append", checkpoint=f"{tmp}/ckpt", foreach_batch=sink
+    )
     return eng.table(table).select(
         "word_idx", "wv", F.bit_count("wv").cast("int").alias("set_bits")
     )
@@ -870,7 +820,7 @@ FROM feats GROUP BY b
 )
 def stream_dsir_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR's target hashed-gram bucket counts maintained as a STREAMING
-    materialized view (judge r10 item #5) — stream_bloom_maintain's
+    materialized view — stream_bloom_maintain's
     pattern applied to COUNTERS: target docs arrive in micro-batches,
     each batch's 4096-bucket count table foreachBatch-MERGEs into the
     warehouse with ``ct + src.ct``.  Unlike the Bloom bitset's ``|``,
@@ -907,16 +857,16 @@ def stream_dsir_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qpmodel_spark.catalog import table_path
     from qpmodel_spark.ddl import Engine
     from qpmodel_spark.pipeline.curation import dsir_feats
-    from qpmodel_spark.streaming.stream_runner import _pinned_state_partitions
+    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
 
     tmp = tempfile.mkdtemp(prefix="qp_dsir_mv_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
+    src = f"{tmp}/src"
     target = (
         spark.read.parquet(table_path(sf_dir, "documents"))
         .where(F.col("doc_id") % 10 == 3)
         .select("doc_id", "text")
     )
-    target.repartition(2).write.mode("overwrite").parquet(src)
+    raw = stage_stream(spark, target, 2, src)
     table = f"dsir_tcnt_{uuid.uuid4().hex[:8]}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(table, "b BIGINT, ct BIGINT")
@@ -954,22 +904,9 @@ def stream_dsir_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
             source_unique=True,
         )
 
-    with _pinned_state_partitions(spark):
-        raw = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            raw.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_windowed_stream(
+        spark, raw, "append", checkpoint=f"{tmp}/ckpt", foreach_batch=sink
+    )
     # re-delivery witness: the full source re-offered under an already-
     # applied batch id; the marker guard keys on the id alone (exactly the
     # re-delivery semantics), so a broken guard doubles every count
@@ -985,7 +922,7 @@ def stream_dsir_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Leaderboard MV (r12): from-scratch per-user exact-millis totals with the
+# Leaderboard MV: from-scratch per-user exact-millis totals with the
 # SAME deterministic tie-break (total desc, user_id asc) the served view
 # states.  n_batches_applied = 2 is the staged-source contract (2 part
 # files, maxFilesPerTrigger=1) AND the re-delivery witness, exactly as in
@@ -1046,15 +983,14 @@ def stream_topk_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from qpmodel_spark import catalog
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.streaming.stream_runner import _pinned_state_partitions
+    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
 
     tmp = tempfile.mkdtemp(prefix="qp_topk_mv_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
+    src = f"{tmp}/src"
     # stage from catalog.load so the events-ts physical-type quirk is
     # normalized away; the stream needs only (user_id, value)
-    catalog.load(spark, sf_dir, "events").select(
-        "user_id", "value"
-    ).repartition(2).write.mode("overwrite").parquet(src)
+    values = catalog.load(spark, sf_dir, "events").select("user_id", "value")
+    raw = stage_stream(spark, values, 2, src)
     table = f"leaderboard_{uuid.uuid4().hex[:8]}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(table, "user_id BIGINT, vm BIGINT")
@@ -1091,22 +1027,9 @@ def stream_topk_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
             source_unique=True,
         )
 
-    with _pinned_state_partitions(spark):
-        raw = (
-            spark.readStream.schema("user_id bigint, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            raw.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_windowed_stream(
+        spark, raw, "append", checkpoint=f"{tmp}/ckpt", foreach_batch=sink
+    )
     # re-delivery witness: full source re-offered under an applied id
     sink(spark.read.parquet(src), 1)
     mv = eng.table(table)
@@ -1126,7 +1049,7 @@ def stream_topk_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# HLL-union MV (r13, judge r12 item #6): the sketch family meets the MV
+# HLL-union MV: the sketch family meets the MV
 # family.  Per-day HyperLogLog registers (m = 64, Flajolet et al. 2007)
 # over the event stream's user ids, maintained as a streaming MV whose
 # micro-batch merge is greatest() per register.  THE CONTRAST WITH THE
@@ -1228,13 +1151,14 @@ def stream_hll_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from qpmodel_spark import catalog
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.streaming.stream_runner import _pinned_state_partitions
+    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
 
     tmp = tempfile.mkdtemp(prefix="qp_hll_mv_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-    catalog.load(spark, sf_dir, "events").select(
+    src = f"{tmp}/src"
+    days = catalog.load(spark, sf_dir, "events").select(
         F.expr("unix_micros(ts) div 86400000000").alias("day_k"), "user_id"
-    ).repartition(2).write.mode("overwrite").parquet(src)
+    )
+    raw = stage_stream(spark, days, 2, src)
     table = f"hll_regs_{uuid.uuid4().hex[:8]}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(table, "kr BIGINT, rho BIGINT")
@@ -1269,22 +1193,9 @@ def stream_hll_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
             source_unique=True,
         )
 
-    with _pinned_state_partitions(spark):
-        raw = (
-            spark.readStream.schema("day_k bigint, user_id bigint")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            raw.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_windowed_stream(
+        spark, raw, "append", checkpoint=f"{tmp}/ckpt", foreach_batch=sink
+    )
     # idempotence witness: the FULL source re-offered as one more merge —
     # with a non-idempotent merge the registers would grow and the
     # estimate would drift off the from-scratch oracle
@@ -1321,7 +1232,7 @@ def stream_hll_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# SCD Type-2 dimension history as a streaming MV (r13 second wave): the
+# SCD Type-2 dimension history as a streaming MV: the
 # warehouse family's op_scd2_intervals build (timeseries.py) meets the
 # MV family.  Each micro-batch of change events MERGEs into a maintained
 # version-history table by REBUILDING the interval sets of exactly the
@@ -1412,7 +1323,7 @@ def _scd2_sink_factory(eng, table: str):
 
 # the oracle IS op_scd2_intervals' (incremental == scratch is the whole
 # claim): imported, not copied, so a future fix there reaches both
-# entries (review r13)
+# entries
 from qpmodel_spark.queries.timeseries import _SCD2_ORACLE as _STREAM_SCD2_ORACLE
 
 
@@ -1437,26 +1348,26 @@ def stream_scd2_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from qpmodel_spark import catalog
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.streaming.stream_runner import _pinned_state_partitions
+    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
 
     tmp = tempfile.mkdtemp(prefix="qp_scd2_mv_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
+    src = f"{tmp}/src"
     # deliberately NOT time-ordered staging: round-robin repartition(2)
     # interleaves every user's timeline across the micro-batches, so the
     # late-data robustness of reconstruction is actually exercised
     # (batch 2 carries timestamps BEFORE stored ones for ~every user).
-    # r14 (judge r13 item #1, trigger batching): 3 -> 2 staged files cuts
-    # one sink invocation (semi-join + re-chain window + MERGE) from the
-    # bounded harness; arbitrary batchings stay covered by the hypothesis
-    # witness (test_mv_reconstruction_invariant_under_random_batching).
-    catalog.load(spark, sf_dir, "events").select(
+    # Two staged files: each further file is one more sink invocation
+    # (semi-join + re-chain window + MERGE); arbitrary batchings are
+    # covered by the hypothesis witness
+    # (test_mv_reconstruction_invariant_under_random_batching).
+    versions = catalog.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("us")
-    ).repartition(2).write.mode("overwrite").parquet(src)
+    )
+    raw = stage_stream(spark, versions, 2, src)
     table = f"scd2_{uuid.uuid4().hex[:8]}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(
@@ -1467,24 +1378,9 @@ def stream_scd2_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sink = _scd2_sink_factory(eng, table)
 
-    with _pinned_state_partitions(spark):
-        raw = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, event_type string, us bigint"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            raw.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_windowed_stream(
+        spark, raw, "append", checkpoint=f"{tmp}/ckpt", foreach_batch=sink
+    )
     # idempotence-by-reconstruction witness: FULL source re-offered as
     # one more unguarded merge — a close-by-arrival maintenance would
     # re-close rows at stale timestamps and drift off the oracle
@@ -1499,7 +1395,7 @@ def stream_scd2_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Append-only JOIN MV via the delta-join algebra (r13 third wave): the
+# Append-only JOIN MV via the delta-join algebra: the
 # MV family so far maintains AGGREGATES (counter grids, leaderboards,
 # HLL registers) and VERSION HISTORIES (scd2); this entry maintains a
 # JOIN — the classic incremental-view-maintenance identity
@@ -1653,10 +1549,10 @@ def stream_delta_join_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFr
 
     from qpmodel_spark import catalog
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.streaming.stream_runner import _pinned_state_partitions
+    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
 
     tmp = tempfile.mkdtemp(prefix="qp_djoin_mv_")
-    src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
+    src = f"{tmp}/src"
     ev = catalog.load(spark, sf_dir, "events").where(
         F.col("event_type").isin("view", "purchase")
     )
@@ -1669,14 +1565,14 @@ def stream_delta_join_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFr
     # round-robin staging: every micro-batch carries BOTH sides, so all
     # three delta terms produce pairs in every batch whose stored sides
     # are non-empty (batches 2 and 3 — two independent all-term batches).
-    # r14 (judge r13 item #1, trigger batching): 4 -> 3 staged files cuts
-    # one full sink invocation (3 MERGEs + the delta-term joins) from the
-    # bounded harness run while keeping every witnessed property: >= 2
-    # all-term batches, interleaved sides, and the unguarded full
-    # re-delivery below.
-    ev.select(
+    # Three staged files keep every witnessed property (>= 2 all-term
+    # batches, interleaved sides, the unguarded full re-delivery below);
+    # each further file is one more sink invocation (3 MERGEs + the
+    # delta-term joins).
+    sides = ev.select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("us")
-    ).repartition(3).write.mode("overwrite").parquet(src)
+    )
+    raw = stage_stream(spark, sides, 3, src)
     sfx = uuid.uuid4().hex[:8]
     a_tab, b_tab, mv = f"dj_views_{sfx}", f"dj_purch_{sfx}", f"dj_pairs_{sfx}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
@@ -1690,24 +1586,9 @@ def stream_delta_join_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFr
 
     sink = _djoin_sink_factory(eng, a_tab, b_tab, mv)
 
-    with _pinned_state_partitions(spark):
-        raw = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, event_type string, us bigint"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            raw.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_windowed_stream(
+        spark, raw, "append", checkpoint=f"{tmp}/ckpt", foreach_batch=sink
+    )
     # idempotence-by-key witness: FULL source re-offered unguarded —
     # non-keyed appends would duplicate every pair and both sides
     sink(spark.read.parquet(src), 99)

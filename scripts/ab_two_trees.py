@@ -1,16 +1,16 @@
 #!/usr/bin/env python
-"""Two-tree interleaved bench A/B (judge r13 item #7).
+"""Two-tree interleaved bench A/B.
 
-Runs bench.py from TWO checkouts (the r13-close worktree and this repo)
-in strict alternation — A, B, A, B, ... — so ambient host drift hits both
-arms symmetrically, and writes ONE committed artifact with per-entry
-minima across each arm's runs plus every run's calibration gauges.  This
-makes the round-over-round comparison self-contained: the next judge
-reads one file measured on one host in one session window, no cross-host
-normalization.
+Runs bench.py from TWO checkouts — the ``base`` tree given by ``--base``
+and the ``change`` tree, this checkout — in strict alternation (base,
+change, base, change, ...) so ambient host drift hits both arms
+symmetrically, and writes ONE artifact with per-entry minima across each
+arm's runs plus every run's calibration gauges.  The comparison is then
+self-contained: one file, measured on one host in one session window, no
+cross-host normalization.
 
 Usage:
-    python scripts/ab_two_trees.py [--reps 2] [--out AB_r14_vs_r13.json]
+    python scripts/ab_two_trees.py --base TREE --out AB.json [--reps 2]
 """
 
 from __future__ import annotations
@@ -22,8 +22,7 @@ import subprocess
 import sys
 import time
 
-A_TREE = "/root/r13close"  # r13-close commit c0f8065 (git worktree)
-B_TREE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CHANGE_TREE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run_bench(tree: str, tag: str) -> dict:
@@ -63,13 +62,17 @@ def run_bench(tree: str, tag: str) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--base", required=True, help="checkout of the base tree")
+    ap.add_argument(
+        "--out", required=True,
+        help="artifact path (relative paths resolve against this checkout)",
+    )
     ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("--out", default="AB_r14_vs_r13.json")
     args = ap.parse_args()
 
     runs = []
     for i in range(args.reps):
-        for arm, tree in (("r13close", A_TREE), ("r14", B_TREE)):
+        for arm, tree in (("base", args.base), ("change", CHANGE_TREE)):
             print(f"run {i} arm {arm} ...", flush=True)
             runs.append({"arm": arm, "rep": i, **run_bench(tree, f"ab{i}{arm}")})
 
@@ -82,10 +85,10 @@ def main() -> None:
                 times[k] = min(v, times.get(k, float("inf")))
         return times
 
-    a, b = arm_min("r13close"), arm_min("r14")
+    a, b = arm_min("base"), arm_min("change")
     common = sorted(set(a) & set(b))
     per_query = {
-        k: {"r13close_sec": a[k], "r14_sec": b[k], "speedup": round(a[k] / b[k], 3) if b[k] else None}
+        k: {"base_sec": a[k], "change_sec": b[k], "speedup": round(a[k] / b[k], 3) if b[k] else None}
         for k in common
     }
     import math
@@ -97,20 +100,20 @@ def main() -> None:
         else None  # no entry timed > 0 on both arms
     )
     artifact = {
-        "description": "interleaved two-tree bench A/B: r13-close (c0f8065) vs r14-close, alternating full bench runs, min per arm",
+        "description": "interleaved two-tree bench A/B: base tree vs change tree, alternating full bench runs, min per arm",
         "run_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "reps_per_arm": args.reps,
-        "geomean_speedup_r14_over_r13close": geomean,
-        "total_r13close": round(sum(a[k] for k in common), 3),
-        "total_r14": round(sum(b[k] for k in common), 3),
+        "geomean_speedup_change_over_base": geomean,
+        "total_base": round(sum(a[k] for k in common), 3),
+        "total_change": round(sum(b[k] for k in common), 3),
         "per_query": per_query,
         "runs": runs,
     }
-    out_path = os.path.join(B_TREE, args.out)
+    out_path = os.path.join(CHANGE_TREE, args.out)
     with open(out_path, "w") as fh:
         json.dump(artifact, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    print(f"geomean r14/r13close speedup: {geomean}; wrote {out_path}")
+    print(f"geomean change/base speedup: {geomean}; wrote {out_path}")
 
 
 if __name__ == "__main__":

@@ -10,10 +10,13 @@ row-multiset equality.
 Usage:
     python scripts/driver_sim.py                 # all entries
     python scripts/driver_sim.py name1 name2 ... # subset
+    python scripts/driver_sim.py --out PATH ...  # per-entry results file
+                                                 # (default .tmp/driver_sim.json)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import math
 import os
@@ -21,7 +24,8 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -82,7 +86,14 @@ def _canon(df: pd.DataFrame) -> list[tuple]:
 
 
 def main() -> None:
-    only = set(sys.argv[1:])
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*", help="entries to run (default: all)")
+    ap.add_argument(
+        "--out", default=os.path.join(REPO, ".tmp", "driver_sim.json"),
+        help="where to write the per-entry results as JSON",
+    )
+    args = ap.parse_args()
+    only = set(args.names)
     specs = registry.all_specs()
     if only:
         specs = {n: s for n, s in specs.items() if n in only}
@@ -186,7 +197,8 @@ def main() -> None:
         print(f"\nWARNING vacuous (0-row) green results: {vacuous}")
 
     print(f"\n{len(results)} entries, {n_fail} failures")
-    with open("/tmp/driver_sim.json", "w") as f:
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
+    with open(args.out, "w") as f:
         json.dump(results, f, indent=1, default=str)
     # pre-commit-gate contract: nonzero exit on any failure (ADVICE r03)
     raise SystemExit(1 if n_fail else 0)

@@ -36,7 +36,7 @@ sys.path.insert(0, REPO)
 from qpmodel_spark import registry  # noqa: E402
 
 STATE_PATH = os.path.join(REPO, ".tmp", "sf01_sweep_state.json")
-SIM_OUT = "/tmp/driver_sim.json"
+SIM_OUT = os.path.join(REPO, ".tmp", "sf01_sweep_sim.json")
 LINE_RE = re.compile(r"^(\S+)\s+(ok|ERR|MISMATCH)\s+([0-9.]+)s\s*$")
 
 
@@ -73,7 +73,10 @@ def run_chunk(names: list[str], timeout: int) -> tuple[dict, str | None]:
     except OSError:
         pass
     proc = subprocess.Popen(
-        [sys.executable, os.path.join(REPO, "scripts", "driver_sim.py"), *names],
+        [
+            sys.executable, os.path.join(REPO, "scripts", "driver_sim.py"),
+            "--out", SIM_OUT, *names,
+        ],
         cwd=REPO,
         env=env,
         stdout=subprocess.PIPE,

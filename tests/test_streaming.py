@@ -67,29 +67,6 @@ def test_stateful_operator_matches_batch(spark):
     assert got == want
 
 
-def test_stream_parquet_sink_exactly_once(spark, tmp_path):
-    """Checkpointed parquet sink: restartable stream writes each window
-    aggregate exactly once (re-running with the same checkpoint adds no
-    duplicate rows)."""
-    from qpmodel_spark.streaming.stream_runner import (
-        run_stream_to_parquet,
-        tumble_stream,
-    )
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def run():
-        ev = read_events_stream(spark, SF_DIR)
-        # append mode requires the watermark to close windows; bounded input
-        # closes everything except the final window
-        return run_stream_to_parquet(spark, tumble_stream(ev), out, ckpt)
-
-    first = run().count()
-    again = run().count()  # same checkpoint: no new input -> no new rows
-    assert first > 0
-    assert again == first
-
-
 def test_streaming_dedup(spark):
     """Streaming dropDuplicatesWithinWatermark removes reprocessed events."""
     from qpmodel_spark.streaming.stream_runner import dedup_stream
@@ -219,6 +196,35 @@ def test_streaming_enrich_matches_batch(spark):
     s = {(r.win_start, r.segment, r.n, r.sum_value) for r in stream_out.collect()}
     b = {(r.win_start, r.segment, r.n, r.sum_value) for r in batch.collect()}
     assert s == b
+
+
+def test_run_windowed_stream_failing_sink_stops_and_restores(spark, tmp_path):
+    """A foreachBatch sink that raises on batch 0: the failure propagates
+    out of run_windowed_stream, no query is left running, and the caller's
+    shuffle-partition count is restored (it is pinned only while the query
+    runs)."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from qpmodel_spark.streaming.stream_runner import stage_stream
+
+    def sink(batch_df, batch_id):
+        if batch_id == 0:
+            raise RuntimeError("sink failed on batch 0")
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "13")  # not the pinned 8
+    try:
+        src = stage_stream(spark, spark.range(10), 2, str(tmp_path / "src"))
+        with pytest.raises(StreamingQueryException, match="sink failed on batch 0"):
+            run_windowed_stream(
+                spark, src, "append",
+                checkpoint=str(tmp_path / "ckpt"), foreach_batch=sink,
+            )
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def test_streaming_upsert_converges_to_batch(spark, tmp_path):
