@@ -209,7 +209,7 @@ class Engine:
     ) -> None:
         """CREATE TABLE t (schema DDL string) [distribution clause]."""
         empty = self.spark.createDataFrame([], schema)
-        self._write(empty, table, "overwrite", distribution)
+        self._write(empty, table, distribution)
         self.distribution[table] = distribution or "none"
 
     def drop_table(self, table: str) -> None:
@@ -232,10 +232,12 @@ class Engine:
         return df
 
     def _write(
-        self, df: DataFrame, table: str, mode: str, distribution: str | None = None
+        self, df: DataFrame, table: str, distribution: str | None = None
     ) -> None:
+        """Overwrite ``table`` with ``df`` (appends go through
+        ``_append_staged``)."""
         df = self._route(df, table, distribution)
-        df.write.mode(mode).parquet(self._path(table))
+        df.write.mode("overwrite").parquet(self._path(table))
         self._refresh(table)
 
     def _refresh(self, table: str) -> None:
@@ -333,19 +335,49 @@ class Engine:
     # for concurrent readers production would layer a versioned table
     # format on the identical rewrite plan.
 
-    def _rewrite(self, table: str, transform, op: str = "rewrite") -> None:
-        import os
+    def _stage(self, df: DataFrame, table: str) -> str:
+        """Write ``df`` (routed like ``table``) to a fresh staging dir and
+        return it.  A failed write removes the dir, so nothing of it stays
+        in the warehouse."""
         import shutil
         import uuid
 
-        self._snapshot(table, op)
-        src = self._read_files(table)  # includes the schema-evolution overlay
         staging = f"{self.warehouse}/.staging_{table}_{uuid.uuid4().hex[:8]}"
-        self._route(transform(src), table).write.parquet(staging)
+        try:
+            self._route(df, table).write.parquet(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        return staging
+
+    def _rewrite(self, table: str, transform, op: str = "rewrite") -> None:
+        """Stage ``transform(table)``, then snapshot, then swap: a write
+        that fails leaves the table and its history untouched."""
+        import os
+        import shutil
+
+        src = self._read_files(table)  # includes the schema-evolution overlay
+        staging = self._stage(transform(src), table)
+        self._snapshot(table, op)
         shutil.rmtree(self._path(table))
         os.rename(staging, self._path(table))
         # the rewrite materialized any added columns into every file
         self._added_cols.pop(table, None)
+        self._refresh(table)
+
+    def _append_staged(self, df: DataFrame, table: str, op: str) -> None:
+        """Append ``df`` to ``table`` the way ``_rewrite`` replaces it:
+        stage, snapshot, then move the staged part files in.  The existing
+        files are never touched, and a failed write leaves no trace."""
+        import os
+        import shutil
+
+        staging = self._stage(df, table)
+        self._snapshot(table, op)
+        for f in os.listdir(staging):
+            if f.lstrip(".").startswith("part-"):  # data files and their .crc
+                os.rename(f"{staging}/{f}", f"{self._path(table)}/{f}")
+        shutil.rmtree(staging)
         self._refresh(table)
 
     # -- Time travel (versioned snapshots over the same rewrite plan) -------
@@ -566,9 +598,8 @@ class Engine:
         when_matched_update: dict[str, str] | None = None,
         when_matched_delete: str | None = None,
         when_not_matched_insert: bool = True,
-        source_unique: bool = False,
     ) -> None:
-        """MERGE INTO (upsert) — one copy-on-write rewrite, ANSI semantics.
+        """MERGE INTO (upsert) — ANSI semantics, one Spark action.
 
         ``on`` is the join key column name; ``when_matched_update`` maps
         target columns to expressions over the matched pair (source columns
@@ -578,65 +609,43 @@ class Engine:
         first, then UPDATE (ANSI WHEN-clause order as written here),
         else carry through unchanged.
 
-        Plan: one full-outer join target⋈source on the key + conditional
-        projection — the exact plan Delta's MERGE executes below its log.
-        Raises on duplicate source keys (ANSI: a target row matched by >1
-        source row is an error) via a pre-checked count — cheap (source is
-        the small side of a merge by construction).
+        Duplicate source keys are rejected on every arm (ANSI: a target row
+        matched by >1 source row is an error).  The source carries
+        ``count(1) OVER (PARTITION BY on)`` and a filter that raises when
+        the count exceeds 1, so the check runs inside the MERGE's own write
+        and is not an action of its own.  It surfaces as ``ValueError``,
+        and the table, its files and its history stay as they were: every
+        arm stages its write before it snapshots and publishes.
 
-        r13 (guide §5 caching): the source is materialized ONCE
-        (localCheckpoint) before the duplicate-key pre-check — the check is
-        a separate Spark action, so an un-materialized source subtree
-        (every streaming MV sink hands in a join/window/dedup chain) was
-        fully executed twice per MERGE: once for the check, once inside the
-        rewrite.  Merge sources are the small side by construction, so the
-        materialization is token-scale; the rewrite then reads the cached
-        blocks instead of re-running the chain.
-
-        r14 (guide §5/§6: don't move bytes the statement cannot change) —
-        two APPEND fast paths replace the full-outer join + whole-table
-        copy-on-write rewrite when the result provably equals
-        "old table files + inserted rows", so the table's existing bytes
-        are never read or rewritten:
+        Three arms read the same checked source; each logs its version
+        snapshot as op "merge" (so MV refresh stays conservative) and
+        routes its write by the table's distribution:
 
         * EMPTY target — no source row can match, the matched arms are
-          vacuous, and the result is exactly the inserted source rows.
-          Emptiness is a parquet-footer metadata check (O(files), no job).
+          vacuous, and the source rows are appended.  Emptiness is a
+          parquet-footer metadata check (O(files), no job).
         * INSERT-ONLY merge (no matched-update / matched-delete) — matched
           target rows carry through unchanged by definition; the delta is
-          ``source ANTI JOIN target`` on the key, appended.  At 100 TB this
-          turns every insert-only MERGE (the delta-join MV family) from a
-          full-table rewrite into a key-column scan + delta append.
+          ``source ANTI JOIN target`` on the key, appended.  The table's
+          existing files are never read beyond the key column, nor
+          rewritten.
+        * otherwise — one full-outer join target⋈source on the key +
+          conditional projection, written as a copy-on-write rewrite (the
+          plan Delta's MERGE executes below its log).  The check's window
+          and the join need the same hash partitioning on the key, so they
+          share one exchange.
 
-        Both paths keep the duplicate-key pre-check, the version snapshot
-        (op "merge", so MV refresh stays conservative) and the distribution
-        routing; they require the source to carry every target column at
+        The append arms need the source to carry every target column at
         the identical type (the full-outer arm's when/otherwise coercion
         could otherwise widen the table's column type) and are skipped
         when a schema-evolution overlay is active (the full rewrite is
         what materializes overlay columns into files).
-
-        r14 ``source_unique``: a caller whose source is key-unique BY
-        CONSTRUCTION (the frame ends in ``groupBy(on).agg`` or
-        ``dropDuplicates([on])`` — every streaming-MV sink does) may
-        assert it to skip the duplicate-key pre-check (provably vacuous
-        there) and the pre-check's materialization: the source is then
-        evaluated exactly ONCE, inside the write — one Spark action per
-        MERGE instead of three.  The assertion is the caller's contract,
-        exactly Delta's MERGE posture (no pre-scan; duplicate matches
-        surface as a runtime error/duplicates).  Default False keeps the
-        ANSI pre-check for every other caller.
         """
+        from pyspark.errors import SparkRuntimeException
+        from pyspark.sql import Window
+
         tgt = self.spark.read.parquet(self._path(table))
         cols = tgt.columns
-        if not source_unique:
-            source = source.localCheckpoint(eager=True)
-            dup = (
-                source.groupBy(on).count().where(F.col("count") > 1).limit(1).count()
-            )
-            if dup:
-                raise ValueError(f"MERGE source has duplicate keys on '{on}'")
-
         tgt_types = {f.name: f.dataType for f in tgt.schema.fields}
         src_types = {f.name: f.dataType for f in source.schema.fields}
         append_safe = (
@@ -644,18 +653,12 @@ class Engine:
             and table not in self._added_cols
             and all(src_types.get(c) == tgt_types[c] for c in cols)
         )
-        if append_safe:
-            insert_only = not when_matched_update and not when_matched_delete
-            if self._is_empty(table):
-                self._snapshot(table, "merge")
-                self._write(source.select(*cols), table, "append")
-                return
-            if insert_only:
-                self._snapshot(table, "merge")
-                new_rows = source.join(tgt.select(on), on, "left_anti")
-                self._write(new_rows.select(*cols), table, "append")
-                return
-
+        dup_msg = f"MERGE source has duplicate keys on '{on}'"
+        source = (
+            source.withColumn("__dup_n", F.count(F.lit(1)).over(Window.partitionBy(on)))
+            .where(F.assert_true(F.col("__dup_n") <= 1, dup_msg).isNull())
+            .drop("__dup_n")
+        )
         src = source.select([F.col(c).alias(f"__src_{c}") for c in source.columns])
 
         def transform(df: DataFrame) -> DataFrame:
@@ -690,7 +693,18 @@ class Engine:
                 j = j.where(~src_only)
             return j.select(*out_cols)
 
-        self._rewrite(table, transform, op="merge")
+        try:
+            if append_safe and self._is_empty(table):
+                self._append_staged(source.select(*cols), table, "merge")
+            elif append_safe and not when_matched_update and not when_matched_delete:
+                new_rows = source.join(tgt.select(on), on, "left_anti")
+                self._append_staged(new_rows.select(*cols), table, "merge")
+            else:
+                self._rewrite(table, transform, op="merge")
+        except SparkRuntimeException as err:
+            if dup_msg in str(err):
+                raise ValueError(dup_msg) from err
+            raise
 
     # -- INSERT / COPY ------------------------------------------------------
     def insert_values(self, table: str, rows: list[tuple]) -> None:
@@ -705,12 +719,11 @@ class Engine:
                 for f in self.spark.table(table).schema.fields
             ]
         )
-        self._snapshot(table, "insert_values")
-        self._write(self.spark.createDataFrame(rows, schema), table, "append")
+        new_rows = self.spark.createDataFrame(rows, schema)
+        self._append_staged(new_rows, table, "insert_values")
 
     def insert_select(self, table: str, df: DataFrame) -> None:
-        self._snapshot(table, "insert_select")
-        self._write(df, table, "append")
+        self._append_staged(df, table, "insert_select")
 
     def copy_from_csv(self, table: str, path: str, where: str | None = None) -> None:
         """COPY t FROM 'file.csv' [WHERE cond] — reference stmtDML.cs:245-285
@@ -719,8 +732,7 @@ class Engine:
         df = self.spark.read.csv(path, schema=schema, nullValue="")
         if where:
             df = df.where(F.expr(where))
-        self._snapshot(table, f"copy_from:{path}")
-        self._write(df, table, "append")
+        self._append_staged(df, table, f"copy_from:{path}")
 
     # -- Partitioned tables (partition pruning) ------------------------------
     def create_partitioned(self, table: str, df: DataFrame, part_col: str) -> None:
@@ -930,7 +942,7 @@ class Engine:
         if not hasattr(self, "_mv_meta"):
             self._mv_meta: dict[str, dict] = {}
         df = self._mv_aggregate(self.spark.table(base), group_cols, measures)
-        self._write(df, mv, "overwrite")
+        self._write(df, mv)
         self._mv_meta[mv] = {
             "base": base,
             "group_cols": list(group_cols),
@@ -977,7 +989,7 @@ class Engine:
             # not purely additive and min/max partials are not
             # subtractable — recompute
             df = self._mv_aggregate(cur, gcols, measures)
-            self._write(df, mv, "overwrite")
+            self._write(df, mv)
             meta["base_version"] = self._snapshot(base, f"mv:{mv}:full")
             meta["base_rows"] = n_cur
             return "full"
@@ -1011,13 +1023,11 @@ class Engine:
     def _overwrite_staged(self, df: DataFrame, table: str) -> None:
         """Overwrite ``table`` with a plan that READS from it: stage the
         result first (Spark cannot overwrite a path it is scanning), then
-        swap — the _rewrite discipline without the pre-snapshot."""
+        swap — the _rewrite discipline without the snapshot."""
         import os
         import shutil
-        import uuid
 
-        staging = f"{self.warehouse}/.staging_{table}_{uuid.uuid4().hex[:8]}"
-        self._route(df, table).write.parquet(staging)
+        staging = self._stage(df, table)
         shutil.rmtree(self._path(table))
         os.rename(staging, self._path(table))
         self._refresh(table)

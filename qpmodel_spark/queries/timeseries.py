@@ -1896,6 +1896,8 @@ def op_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = nonadj.orderBy(
         F.desc("cn"), F.desc("ra_micros"), "u", "w"
     ).limit(_LINKPRED_TOPK)
+    # an unpartitioned window, but over the _LINKPRED_TOPK (20) rows of
+    # `top` only — bounded by construction, whatever the input size
     wr = Window.orderBy(F.desc("cn"), F.desc("ra_micros"), "u", "w")
     return top.withColumn("rnk", F.row_number().over(wr).cast("bigint")).select(
         "u", "w", "cn", "ra_micros", "rnk"

@@ -29,6 +29,21 @@ def _cpus() -> int:
         return 32
 
 
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else 48g capped at half the host's
+    physical memory.  In local mode the whole heap lives on this host: a
+    maximum above RAM lets G1 grow the heap until the kernel kills the JVM
+    (on a 16 GB host the test-suite JVM was OOM-killed at 15 GB RSS)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError):  # no physical-memory query on this platform
+        return "48g"
+    return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "qpmodel_spark",
     shuffle_partitions: int | None = None,
@@ -63,9 +78,7 @@ def get_spark(
     if SparkSession.getActiveSession() is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
         builder = builder.master(master)
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        builder = builder.config("spark.driver.memory", _driver_mem())
         if master.startswith("local"):
             # Testdata tables are single ~20 MB parquet files: at the 128 MB
             # default they scan as ONE partition (no parallelism — measured

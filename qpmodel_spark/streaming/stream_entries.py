@@ -210,17 +210,17 @@ def stream_cdc_upsert_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     (idempotent upsert).  ≙ the Delta/Iceberg streaming-MERGE pattern with
     the copy-on-write rewrite standing in for the transaction log.
     """
-    import tempfile
     import uuid
 
     from qpmodel_spark.ddl import Engine
     from qpmodel_spark.streaming.stream_runner import (
         read_events_stream_batched,
         run_stream_upsert,
+        scratch_dir,
         user_totals,
     )
 
-    tmp = tempfile.mkdtemp(prefix="qp_cdc_")
+    tmp = scratch_dir("qp_cdc_")
     table = f"cdc_user_totals_{uuid.uuid4().hex[:8]}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(table, "user_id BIGINT, n BIGINT, sv DOUBLE")
@@ -419,7 +419,6 @@ def stream_restart_resume_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
     import uuid
 
     from qpmodel_spark.catalog import normalize_events_ts, table_path
@@ -428,10 +427,11 @@ def stream_restart_resume_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_schema,
         file_batches,
         run_stream_upsert,
+        scratch_dir,
         user_totals,
     )
 
-    tmp = tempfile.mkdtemp(prefix="qp_restart_")
+    tmp = scratch_dir("qp_restart_")
     alldir, src, ckpt = f"{tmp}/all", f"{tmp}/src", f"{tmp}/ckpt"
     schema = _events_schema(spark, sf_dir)
     (
@@ -506,7 +506,6 @@ def stream_continuous_aggregate_entry(spark: SparkSession, sf_dir: str) -> DataF
     ≙ reference Stream.cs:183-194 (stub) — executable streaming IVM is
     strictly beyond reference parity.
     """
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -515,9 +514,10 @@ def stream_continuous_aggregate_entry(spark: SparkSession, sf_dir: str) -> DataF
     from qpmodel_spark.streaming.stream_runner import (
         read_events_stream_batched,
         run_stream_upsert,
+        scratch_dir,
     )
 
-    tmp = tempfile.mkdtemp(prefix="qp_cagg_stream_")
+    tmp = scratch_dir("qp_cagg_stream_")
     table = f"cagg_mv_{uuid.uuid4().hex[:8]}"
     eng = Engine(spark, warehouse=f"{tmp}/wh")
     eng.create_table(
@@ -621,13 +621,13 @@ def stream_session_timeout_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≙ reference Stream.cs:183-194 (stub): timeout-evicted custom state is
     strictly beyond reference parity.
     """
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from qpmodel_spark.streaming.stream_runner import (
         read_events_stream_sentinel_batched,
         run_windowed_stream,
+        scratch_dir,
         session_timeout_stream,
     )
 
@@ -646,7 +646,7 @@ def stream_session_timeout_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return run_windowed_stream(
         spark, sessions, "append",
-        checkpoint=tempfile.mkdtemp(prefix="qp_sess_timeout_ckpt_"),
+        checkpoint=scratch_dir("qp_sess_timeout_ckpt_"),
     )
 
 
@@ -674,12 +674,11 @@ def stream_kill_resume_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     which runs the 4-file variant and additionally pins the double-MERGE
     observation via the harness's merge_log.
     """
-    import tempfile
 
-    from qpmodel_spark.streaming.stream_runner import run_kill_resume
+    from qpmodel_spark.streaming.stream_runner import run_kill_resume, scratch_dir
 
     return run_kill_resume(
-        spark, sf_dir, tempfile.mkdtemp(prefix="qp_killres_"), n_files=2
+        spark, sf_dir, scratch_dir("qp_killres_"), n_files=2
     )
 
 
@@ -733,7 +732,6 @@ def stream_bloom_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     1093-row table.  This is how a production gate ingests newly published
     benchmarks continuously instead of rebuilding from history.
     """
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -745,9 +743,13 @@ def stream_bloom_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_gram_expr,
         bloom_pack_words,
     )
-    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
+    from qpmodel_spark.streaming.stream_runner import (
+        run_windowed_stream,
+        scratch_dir,
+        stage_stream,
+    )
 
-    tmp = tempfile.mkdtemp(prefix="qp_bloom_mv_")
+    tmp = scratch_dir("qp_bloom_mv_")
     bench = (
         spark.read.parquet(table_path(sf_dir, "documents"))
         .where(F.col("doc_id") % 10 == 3)
@@ -769,14 +771,11 @@ def stream_bloom_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         return bloom_pack_words(grams)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # source_unique: batch_words ends in groupBy(word_idx).agg —
-        # key-unique by construction, the ANSI dup pre-check is vacuous
         eng.merge_into(
             table,
             batch_words(batch_df),
             on="word_idx",
             when_matched_update={"wv": "wv | src.wv"},
-            source_unique=True,
         )
 
     run_windowed_stream(
@@ -849,7 +848,6 @@ def stream_dsir_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≙ reference Stream.cs:183-194 (stub): maintained streaming state is
     strictly beyond reference parity.
     """
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -857,9 +855,13 @@ def stream_dsir_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qpmodel_spark.catalog import table_path
     from qpmodel_spark.ddl import Engine
     from qpmodel_spark.pipeline.curation import dsir_feats
-    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
+    from qpmodel_spark.streaming.stream_runner import (
+        run_windowed_stream,
+        scratch_dir,
+        stage_stream,
+    )
 
-    tmp = tempfile.mkdtemp(prefix="qp_dsir_mv_")
+    tmp = scratch_dir("qp_dsir_mv_")
     src = f"{tmp}/src"
     target = (
         spark.read.parquet(table_path(sf_dir, "documents"))
@@ -893,15 +895,11 @@ def stream_dsir_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if applied:  # re-delivered batch: counters must not re-merge
             return
-        # source_unique: groupBy(b).agg counts (b >= 0) UNION one marker
-        # row at b = -1-batch_id — disjoint key ranges, unique by
-        # construction; the dup pre-check is vacuous
         eng.merge_into(
             table,
             batch_counts(batch_df, batch_id),
             on="b",
             when_matched_update={"ct": "ct + src.ct"},
-            source_unique=True,
         )
 
     run_windowed_stream(
@@ -976,16 +974,19 @@ def stream_topk_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the MV.  ≙ reference Stream.cs:183-194 (stub): maintained
     streaming state is strictly beyond reference parity.
     """
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from qpmodel_spark import catalog
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
+    from qpmodel_spark.streaming.stream_runner import (
+        run_windowed_stream,
+        scratch_dir,
+        stage_stream,
+    )
 
-    tmp = tempfile.mkdtemp(prefix="qp_topk_mv_")
+    tmp = scratch_dir("qp_topk_mv_")
     src = f"{tmp}/src"
     # stage from catalog.load so the events-ts physical-type quirk is
     # normalized away; the stream needs only (user_id, value)
@@ -1017,14 +1018,11 @@ def stream_topk_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if applied:  # re-delivered batch: totals must not re-merge
             return
-        # source_unique: groupBy(user_id).agg totals (ids >= 0) UNION one
-        # negative marker row — unique by construction
         eng.merge_into(
             table,
             batch_totals(batch_df, batch_id),
             on="user_id",
             when_matched_update={"vm": "vm + src.vm"},
-            source_unique=True,
         )
 
     run_windowed_stream(
@@ -1144,16 +1142,19 @@ def stream_hll_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     |days| x 64 -> |days|.  ≙ reference Stream.cs:183-194 (stub):
     maintained sketch state is strictly beyond reference parity.
     """
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from qpmodel_spark import catalog
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
+    from qpmodel_spark.streaming.stream_runner import (
+        run_windowed_stream,
+        scratch_dir,
+        stage_stream,
+    )
 
-    tmp = tempfile.mkdtemp(prefix="qp_hll_mv_")
+    tmp = scratch_dir("qp_hll_mv_")
     src = f"{tmp}/src"
     days = catalog.load(spark, sf_dir, "events").select(
         F.expr("unix_micros(ts) div 86400000000").alias("day_k"), "user_id"
@@ -1184,13 +1185,11 @@ def stream_hll_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         # NO batch-id guard, deliberately: greatest() is idempotent, so a
         # re-delivered batch converges to identical register state (the
         # contrast with stream_topk_maintain's guarded `+` MERGE)
-        # source_unique: batch_regs ends in groupBy(kr).agg — unique
         eng.merge_into(
             table,
             batch_regs(batch_df),
             on="kr",
             when_matched_update={"rho": "greatest(rho, src.rho)"},
-            source_unique=True,
         )
 
     run_windowed_stream(
@@ -1305,8 +1304,6 @@ def _scd2_sink_factory(eng, table: str):
         allv = stored.unionByName(
             batch_df.select("event_id", "user_id", "event_type", "us")
         ).dropDuplicates(["event_id"])
-        # source_unique: allv is dropDuplicates(["event_id"]) and rechain
-        # is row-preserving (one lead() projection) — event_id unique
         eng.merge_into(
             table,
             rechain(allv),
@@ -1315,7 +1312,6 @@ def _scd2_sink_factory(eng, table: str):
                 "valid_to_us": "src.valid_to_us",
                 "is_current": "src.is_current",
             },
-            source_unique=True,
         )
 
     return sink
@@ -1345,16 +1341,19 @@ def stream_scd2_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     See the block comment above for the MV family's merge-character
     taxonomy and the 100 TB cost argument.
     """
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from qpmodel_spark import catalog
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
+    from qpmodel_spark.streaming.stream_runner import (
+        run_windowed_stream,
+        scratch_dir,
+        stage_stream,
+    )
 
-    tmp = tempfile.mkdtemp(prefix="qp_scd2_mv_")
+    tmp = scratch_dir("qp_scd2_mv_")
     src = f"{tmp}/src"
     # deliberately NOT time-ordered staging: round-robin repartition(2)
     # interleaves every user's timeline across the micro-batches, so the
@@ -1492,22 +1491,13 @@ def _djoin_sink_factory(eng, a_tab: str, b_tab: str, mv: str):
         )
         # MV first: its source reads the PRE-batch side tables, whose
         # parquet the side merges below rewrite
-        # source_unique on all three: new_pairs is dropDuplicates(["pk"]),
-        # both side sources dropDuplicates(["event_id"]) — the ANSI dup
-        # pre-check is vacuous, so each MERGE is ONE action (the write)
-        eng.merge_into(mv, new_pairs, on="pk", source_unique=True)
+        eng.merge_into(mv, new_pairs, on="pk")
         if stop_after_merges <= 1:
             return
-        eng.merge_into(
-            a_tab, da.dropDuplicates(["event_id"]), on="event_id",
-            source_unique=True,
-        )
+        eng.merge_into(a_tab, da.dropDuplicates(["event_id"]), on="event_id")
         if stop_after_merges <= 2:
             return
-        eng.merge_into(
-            b_tab, db.dropDuplicates(["event_id"]), on="event_id",
-            source_unique=True,
-        )
+        eng.merge_into(b_tab, db.dropDuplicates(["event_id"]), on="event_id")
 
     return sink
 
@@ -1542,16 +1532,19 @@ def stream_delta_join_maintain_entry(spark: SparkSession, sf_dir: str) -> DataFr
     Converged MV == the from-scratch join — incremental == scratch,
     driver-oracled.
     """
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
 
     from qpmodel_spark import catalog
     from qpmodel_spark.ddl import Engine
-    from qpmodel_spark.streaming.stream_runner import run_windowed_stream, stage_stream
+    from qpmodel_spark.streaming.stream_runner import (
+        run_windowed_stream,
+        scratch_dir,
+        stage_stream,
+    )
 
-    tmp = tempfile.mkdtemp(prefix="qp_djoin_mv_")
+    tmp = scratch_dir("qp_djoin_mv_")
     src = f"{tmp}/src"
     ev = catalog.load(spark, sf_dir, "events").where(
         F.col("event_type").isin("view", "purchase")

@@ -15,7 +15,10 @@ and stopped:
   partitions, runs the query into a memory table or a ``foreachBatch``
   sink (optionally checkpointed), drains it with ``processAllAvailable``
   and stops it in ``finally``.  It is both the test harness and the
-  template for a production kafka-source deployment.
+  template for a production kafka-source deployment;
+- ``scratch_dir`` makes the directories a run stages into, checkpoints to
+  and keeps its warehouse in, under one root per process that is removed
+  at exit.
 
 Watermarks (absent in the reference — SURVEY §2.10) bound the state store:
 late events beyond the watermark are dropped, so state size is
@@ -25,7 +28,9 @@ plans viable on an unbounded 100 TB/day stream.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -38,6 +43,28 @@ from qpmodel_spark.queries._util import msum
 
 # one staged source dir per sf_dir per process (avoid temp-dir leak per call)
 _STAGE_DIRS: dict[str, str] = {}
+# the per-process parent of every scratch_dir, made on first use
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory for a streaming run's staged source, checkpoint or
+    warehouse.  All of them sit under one root per process, made on first
+    use and removed at exit.  Only the process that made the root removes
+    it: a forked Python worker inherits the exit hook but must not delete
+    the driver's files."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="qp_scratch_")
+        atexit.register(_remove_scratch_root, _SCRATCH_ROOT, os.getpid())
+    path = os.path.join(_SCRATCH_ROOT, f"{prefix}{uuid.uuid4().hex[:8]}")
+    os.mkdir(path)
+    return path
+
+
+def _remove_scratch_root(root: str, owner_pid: int) -> None:
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
@@ -72,7 +99,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     stage = _STAGE_DIRS.get(sf_dir)
     if stage is None:
-        stage = tempfile.mkdtemp(prefix="qp_stream_events_")
+        stage = scratch_dir("qp_stream_events_")
         os.symlink(table_path(sf_dir, "events"), os.path.join(stage, "events.parquet"))
         _STAGE_DIRS[sf_dir] = stage
     raw = spark.readStream.schema(_events_schema(spark, sf_dir)).parquet(stage)
@@ -232,7 +259,7 @@ def read_events_stream_batched(
     schema = _events_schema(spark, sf_dir)
     stage = _STAGE_DIRS.get(key)
     if stage is None:
-        stage = tempfile.mkdtemp(prefix="qp_stream_batched_")
+        stage = scratch_dir("qp_stream_batched_")
         spark.read.schema(schema).parquet(
             table_path(sf_dir, "events")
         ).repartition(n_files).write.mode("overwrite").parquet(stage)
@@ -253,6 +280,7 @@ def run_stream_upsert(
     warehouse table (foreachBatch + Engine.merge_into).
 
     ``streaming_totals`` must be an update-mode aggregate keyed by ``key``
+    (a batch holding a key twice fails the MERGE, and with it the query)
     — each micro-batch emits the keys whose totals changed, and the merge
     overwrites those rows (last-write-wins) / inserts new keys, so the
     table converges to exactly the batch aggregate of everything ingested.
@@ -270,12 +298,7 @@ def run_stream_upsert(
     updates = {c: f"src.{c}" for c in update_cols}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # source_unique: an update-mode aggregate keyed by ``key`` emits
-        # one row per changed key per micro-batch — unique by construction
-        engine.merge_into(
-            table, batch_df, on=key, when_matched_update=updates,
-            source_unique=True,
-        )
+        engine.merge_into(table, batch_df, on=key, when_matched_update=updates)
 
     run_windowed_stream(
         spark, streaming_totals, "update",
@@ -424,7 +447,7 @@ def read_events_stream_time_batched(
     stage = _STAGE_DIRS.get(key)
     schema = _events_schema(spark, sf_dir)
     if stage is None:
-        stage = tempfile.mkdtemp(prefix="qp_stream_tb_")
+        stage = scratch_dir("qp_stream_tb_")
         src = spark.read.schema(schema).parquet(table_path(sf_dir, "events"))
         bounds = src.selectExpr(
             *[
@@ -559,7 +582,7 @@ def read_events_stream_sentinel_batched(
     stage = _STAGE_DIRS.get(key)
     schema = _events_schema(spark, sf_dir)
     if stage is None:
-        stage = tempfile.mkdtemp(prefix="qp_stream_sent_")
+        stage = scratch_dir("qp_stream_sent_")
         src = spark.read.schema(schema).parquet(table_path(sf_dir, "events"))
         # ONE stats pass: percentile edges AND max(ts) in the same
         # aggregate, materialized so both sentinel selects below read the
@@ -731,13 +754,11 @@ def run_kill_resume(
     kill = {"armed": True}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # source_unique: update-mode groupBy(user_id) aggregate
         eng.merge_into(
             table,
             batch_df,
             on="user_id",
             when_matched_update={"n": "src.n", "sv": "src.sv"},
-            source_unique=True,
         )
         if merge_log is not None:
             merge_log.append(batch_id)

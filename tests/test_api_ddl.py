@@ -301,9 +301,24 @@ def test_orc_roundtrip(spark, tmp_path):
     assert {tuple(r) for r in nat.collect()} == {tuple(r) for r in back.collect()}
 
 
+def _merge_state(spark, eng, table, warehouse):
+    """Everything a rejected MERGE must leave as it was: the rows, the
+    part-file inodes and the history length.  Also checks that no staging
+    directory is left in the warehouse."""
+    import glob
+
+    assert not glob.glob(f"{warehouse}/.staging_*")
+    return (
+        sorted(tuple(r) for r in spark.table(table).collect()),
+        {f: os.stat(f).st_ino for f in glob.glob(f"{warehouse}/{table}/*.parquet")},
+        eng.history(table).count(),
+    )
+
+
 def test_merge_into_upsert(spark, tmp_path):
     """MERGE INTO: matched-update, matched-delete, not-matched-insert in one
-    rewrite; duplicate source keys rejected (ANSI)."""
+    rewrite; duplicate source keys rejected (ANSI) on the insert-only and
+    the rewrite arm, leaving rows, files and history untouched."""
     import pytest as _pytest
 
     eng = Engine(spark, str(tmp_path))
@@ -329,8 +344,19 @@ def test_merge_into_upsert(spark, tmp_path):
     }, got
 
     dup = spark.createDataFrame([(5, 1.0, "x"), (5, 2.0, "y")], "id int, val double, tag string")
+    before = _merge_state(spark, eng, "mt", tmp_path)
     with _pytest.raises(ValueError, match="duplicate keys"):
         eng.merge_into("mt", dup, on="id")
+    assert _merge_state(spark, eng, "mt", tmp_path) == before
+    # the rewrite arm: a matched key among the duplicates
+    dup_matched = spark.createDataFrame(
+        [(1, 1.0, "x"), (1, 2.0, "y")], "id int, val double, tag string"
+    )
+    with _pytest.raises(ValueError, match="duplicate keys"):
+        eng.merge_into(
+            "mt", dup_matched, on="id", when_matched_update={"val": "src.val"}
+        )
+    assert _merge_state(spark, eng, "mt", tmp_path) == before
     eng.drop_table("mt")
 
 
@@ -584,16 +610,25 @@ def test_ansi_overflow_error_parity(spark, duck):
 
 
 def test_merge_into_append_fast_paths(spark, tmp_path):
-    """r14 MERGE fast paths: (a) an empty target takes the append path and
+    """MERGE append fast paths: (a) an empty target takes the append path and
     lands exactly the source rows; (b) an INSERT-ONLY merge appends the
     anti-join delta WITHOUT rewriting the table's existing files (the
     original part files survive byte-identical in place); (c) a merge with
     matched arms still takes the full rewrite and its semantics are
-    unchanged."""
+    unchanged.  A duplicate-key source is rejected on each of the three
+    arms and leaves rows, files and history as they were."""
     import glob
 
     eng = Engine(spark, str(tmp_path))
     eng.create_table("fp", "id int, val double")
+
+    # a duplicate-key source on the empty-target arm is rejected without
+    # a trace, like on the other two arms
+    dup0 = spark.createDataFrame([(1, 1.0), (1, 2.0)], "id int, val double")
+    before = _merge_state(spark, eng, "fp", tmp_path)
+    with pytest.raises(ValueError, match="duplicate keys"):
+        eng.merge_into("fp", dup0, on="id")
+    assert _merge_state(spark, eng, "fp", tmp_path) == before
 
     # (a) empty target + matched arms present: arms are vacuous, fast path
     src0 = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id int, val double")
@@ -628,9 +663,49 @@ def test_merge_into_append_fast_paths(spark, tmp_path):
 
     # duplicate-source-key rejection holds on the fast path too
     dup = spark.createDataFrame([(7, 1.0), (7, 2.0)], "id int, val double")
+    before = _merge_state(spark, eng, "fp", tmp_path)
     with pytest.raises(ValueError, match="duplicate keys"):
         eng.merge_into("fp", dup, on="id")
+    assert _merge_state(spark, eng, "fp", tmp_path) == before
+    # and on the full rewrite
+    with pytest.raises(ValueError, match="duplicate keys"):
+        eng.merge_into("fp", dup, on="id", when_matched_update={"val": "src.val"})
+    assert _merge_state(spark, eng, "fp", tmp_path) == before
     eng.drop_table("fp")
+
+
+def test_merge_into_is_one_action_sharing_the_join_exchange(spark, tmp_path):
+    """The duplicate-key check rides inside the MERGE's write: a rewrite-
+    arm MERGE is one Spark action, and its plan has the two hash exchanges
+    the full-outer join needs anyway (target on the key; the aggregated
+    source on the key, which the check's window reuses)."""
+    import re
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    eng = Engine(spark, str(tmp_path))
+    eng.create_table("one", "k bigint, v bigint")
+    eng.insert_values("one", [(k, k) for k in range(10)])
+    src = spark.range(40).selectExpr("id % 20 AS k", "id AS v").groupBy("k").agg(
+        F.sum("v").alias("v")
+    )
+    n0 = store.executionsCount()
+    eng.merge_into("one", src, on="k", when_matched_update={"v": "src.v"})
+    execs = store.executionsList(n0, store.executionsCount() - n0)
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).jobs().size() > 0
+    ]
+    assert len(plans) == 1, plans
+    final = plans[0].split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
+    ids = re.findall(r"[-\s]Exchange \((\d+)\)", final)
+    hashed = [
+        i for i in ids
+        if re.search(rf"\n\({i}\) Exchange\n.*\nArguments: hashpartitioning", plans[0])
+    ]
+    assert len(hashed) == 2, plans[0]
+    assert spark.table("one").count() == 20
+    eng.drop_table("one")
 
 
 def test_is_empty_stops_at_first_nonempty_footer(spark, tmp_path, monkeypatch):

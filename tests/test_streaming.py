@@ -264,6 +264,68 @@ def test_streaming_upsert_converges_to_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
+def test_streaming_upsert_rejects_non_unique_source(spark, tmp_path):
+    """An update-mode aggregate keyed wider than the MERGE key
+    (groupBy(user_id, event_type) merged on user_id) hands the sink several
+    rows per user_id.  The MERGE rejects the batch: the query fails with
+    the duplicate-key error and is stopped, and the table stays empty
+    instead of silently holding duplicate user_id rows."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    from qpmodel_spark.ddl import Engine
+    from qpmodel_spark.streaming.stream_runner import (
+        read_events_stream_batched,
+        run_stream_upsert,
+    )
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    eng.create_table("type_totals", "user_id BIGINT, event_type STRING, n BIGINT")
+    totals = (
+        read_events_stream_batched(spark, SF_DIR, n_files=2)
+        .groupBy("user_id", "event_type")
+        .agg(F.count("*").alias("n"))
+    )
+    with pytest.raises(StreamingQueryException, match="duplicate keys"):
+        run_stream_upsert(
+            spark, totals, eng, "type_totals", "user_id",
+            ["event_type", "n"], str(tmp_path / "ckpt"),
+        )
+    assert spark.streams.active == []
+    assert eng.table("type_totals").count() == 0
+
+
+def test_scratch_dir_root_removed_at_exit(tmp_path):
+    """Every scratch_dir sits under one per-process root that the process
+    removes at exit, so a run leaves no qp_* entry in the temp dir.  A
+    forked child inherits the exit hook but leaves the root alone."""
+    import os
+    import subprocess
+    import sys
+
+    code = """
+import os, sys
+from qpmodel_spark.streaming.stream_runner import scratch_dir
+a, b = scratch_dir("qp_a_"), scratch_dir("qp_b_")
+assert os.path.isdir(a) and os.path.dirname(a) == os.path.dirname(b)
+pid = os.fork()
+if pid == 0:
+    sys.exit(0)  # runs the inherited exit hooks in the child
+os.waitpid(pid, 0)
+assert os.path.isdir(a), "a forked child removed the parent's scratch root"
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", code],
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        cwd=repo,
+        check=True,
+        timeout=120,
+    )
+    assert not list(tmp_path.glob("qp_*"))
+
+
 def test_streaming_ewma_matches_batch_bitexact(spark):
     """Sliding-recurrence stateful op: streaming EWMA over time-ordered
     micro-batches must be BIT-equal to the batch op_ewma entry — state
