@@ -30,6 +30,7 @@ import tempfile
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def explain_string(df: DataFrame, mode: str = "formatted") -> str:
@@ -180,6 +181,9 @@ class Engine:
         # (table -> {col: (sql_type, default_expr)}); resolved at read time
         # until the next copy-on-write rewrite materializes them
         self._added_cols: dict[str, dict[str, tuple[str, str]]] = {}
+        # table -> schema of the files the Engine last wrote there; _scan
+        # reads with it, so only a table without a record pays inference
+        self._schemas: dict[str, StructType] = {}
 
     def _path(self, table: str) -> str:
         return f"{self.warehouse}/{table}"
@@ -207,8 +211,11 @@ class Engine:
         schema: str,
         distribution: str | None = None,
     ) -> None:
-        """CREATE TABLE t (schema DDL string) [distribution clause]."""
-        empty = self.spark.createDataFrame([], schema)
+        """CREATE TABLE t (schema DDL string) [distribution clause].
+
+        ``limit(0)`` lets the optimizer plan the empty frame as an empty
+        local relation, so the write starts no Python-worker tasks."""
+        empty = self.spark.createDataFrame([], schema).limit(0)
         self._write(empty, table, distribution)
         self.distribution[table] = distribution or "none"
 
@@ -221,6 +228,7 @@ class Engine:
         shutil.rmtree(self._path(table), ignore_errors=True)
         self.distribution.pop(table, None)
         self.analyzed.discard(table)
+        self._schemas.pop(table, None)
 
     def _route(self, df: DataFrame, table: str, distribution: str | None = None) -> DataFrame:
         distribution = distribution or self.distribution.get(table, "none")
@@ -238,6 +246,7 @@ class Engine:
         ``_append_staged``)."""
         df = self._route(df, table, distribution)
         df.write.mode("overwrite").parquet(self._path(table))
+        self._schemas[table] = df.schema
         self._refresh(table)
 
     def _refresh(self, table: str) -> None:
@@ -257,8 +266,25 @@ class Engine:
         """Table files + schema-evolution overlay (see _read_with_overlay)."""
         extras = self._added_cols.get(table)
         if not extras:
-            return self.spark.read.parquet(self._path(table))
+            return self._scan(table)
         return self._read_with_overlay(self._path(table), extras)
+
+    def _scan(self, table: str) -> DataFrame:
+        """The table's files, read with the schema the Engine recorded when
+        it wrote them; every read of a live table without an ADD COLUMN
+        overlay goes through here.  Every overwrite (``_write``,
+        ``_rewrite``, ``_overwrite_staged``) records the frame it wrote, an
+        append of the same schema keeps the record, and any other write
+        drops it.  Without a record the schema is inferred from the parquet
+        footers, which costs a Spark job, and is recorded.  A scan makes
+        every field nullable whether its schema is given or inferred, so
+        both read identically."""
+        schema = self._schemas.get(table)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(self._path(table))
+        df = self.spark.read.parquet(self._path(table))
+        self._schemas[table] = df.schema
+        return df
 
     def _read_with_overlay(
         self, path: str, extras: dict[str, tuple[str, str]]
@@ -266,12 +292,12 @@ class Engine:
         """Read a file set applying the ADD COLUMN overlay with Delta/
         Iceberg semantics: the default is synthesized ONLY for rows in
         files that physically lack the column (written before the ALTER);
-        files that carry it keep their values — including explicit NULLs
-        (r3 advice: coalescing everything turned post-ALTER NULLs into the
-        default).  Files are grouped by which overlay columns their footer
-        schema carries and each group is read once; the footer scan is an
-        O(files) metadata pass, the same information a manifest-based
-        format (Delta/Iceberg) would hold per file at 100 TB."""
+        files that carry it keep their values — including explicit NULLs,
+        which a blanket coalesce would turn into the default.  Files are
+        grouped by which overlay columns their footer schema carries and
+        each group is read once; the footer scan is an O(files) metadata
+        pass, the same information a manifest-based format (Delta/Iceberg)
+        would hold per file at 100 TB."""
         import glob as _glob
 
         import pyarrow.parquet as _pq
@@ -356,13 +382,14 @@ class Engine:
         import os
         import shutil
 
-        src = self._read_files(table)  # includes the schema-evolution overlay
-        staging = self._stage(transform(src), table)
+        out = transform(self._read_files(table))  # overlay included
+        staging = self._stage(out, table)
         self._snapshot(table, op)
         shutil.rmtree(self._path(table))
         os.rename(staging, self._path(table))
         # the rewrite materialized any added columns into every file
         self._added_cols.pop(table, None)
+        self._schemas[table] = out.schema
         self._refresh(table)
 
     def _append_staged(self, df: DataFrame, table: str, op: str) -> None:
@@ -378,6 +405,11 @@ class Engine:
             if f.lstrip(".").startswith("part-"):  # data files and their .crc
                 os.rename(f"{staging}/{f}", f"{self._path(table)}/{f}")
         shutil.rmtree(staging)
+        rec = self._schemas.get(table)
+        if rec is not None and rec.simpleString() != df.schema.simpleString():
+            # files of another schema (nullability aside, which a scan
+            # drops): inference picks one file's footer, as it always did
+            del self._schemas[table]
         self._refresh(table)
 
     # -- Time travel (versioned snapshots over the same rewrite plan) -------
@@ -512,12 +544,13 @@ class Engine:
                 except OSError:
                     shutil.copy2(os.path.join(root, f), os.path.join(dst_root, f))
         # reinstate the ADD COLUMN overlay as of that version, so a column
-        # added before the snapshot survives the rollback (r3 advice)
+        # added before the snapshot survives the rollback
         extras = self._version_overlay(table, version)
         if extras:
             self._added_cols[table] = extras
         else:
             self._added_cols.pop(table, None)
+        self._schemas.pop(table, None)
         self._refresh(table)
 
     def vacuum(self, table: str, keep_last: int = 1) -> int:
@@ -644,7 +677,7 @@ class Engine:
         from pyspark.errors import SparkRuntimeException
         from pyspark.sql import Window
 
-        tgt = self.spark.read.parquet(self._path(table))
+        tgt = self._scan(table)
         cols = tgt.columns
         tgt_types = {f.name: f.dataType for f in tgt.schema.fields}
         src_types = {f.name: f.dataType for f in source.schema.fields}
@@ -746,6 +779,7 @@ class Engine:
         """
         df.write.mode("overwrite").partitionBy(part_col).parquet(self._path(table))
         self.distribution[table] = f"partitioned:{part_col}"
+        self._schemas.pop(table, None)  # partition column types come from paths
         self._refresh(table)
 
     def insert_overwrite_partitions(self, table: str, df: DataFrame) -> None:
@@ -764,8 +798,7 @@ class Engine:
             raise ValueError(f"table '{table}' is not partitioned")
         part_col = dist.split(":", 1)[1]
         # every mutation archives the prior state first (time-travel
-        # invariant; r3 advice — this was the one mutating path that
-        # skipped it, losing overwritten partitions from history)
+        # invariant), so overwritten partitions stay in the history
         self._snapshot(table, "insert_overwrite")
         (
             df.write.mode("overwrite")
@@ -773,6 +806,7 @@ class Engine:
             .partitionBy(part_col)
             .parquet(self._path(table))
         )
+        self._schemas.pop(table, None)
         self._refresh(table)
 
     # -- Bucketed tables (shuffle-free co-located joins) ---------------------
@@ -793,6 +827,7 @@ class Engine:
             .saveAsTable(table)
         )
         self.distribution[table] = f"bucketed:{key}:{n_buckets}"
+        self._schemas.pop(table, None)
 
     # -- CREATE INDEX (zone-map layout) --------------------------------------
     def create_index(self, table: str, col: str, n_ranges: int = 8) -> None:
@@ -807,7 +842,7 @@ class Engine:
         100 TB analog of an index seek — O(matching ranges) IO instead of
         a full scan — and it is what ZORDER/liquid clustering generalize.
         """
-        df = self.spark.read.parquet(self._path(table))
+        df = self._scan(table)
         clustered = df.repartitionByRange(n_ranges, F.col(col)).sortWithinPartitions(col)
         tmp = self._path(f"__reindex_{table}")
         clustered.write.mode("overwrite").parquet(tmp)
@@ -815,6 +850,7 @@ class Engine:
 
         shutil.rmtree(self._path(table))
         shutil.move(tmp, self._path(table))
+        self._schemas.pop(table, None)
         self._refresh(table)
 
     # -- Z-ORDER clustering (multi-column data skipping) ---------------------
@@ -872,6 +908,7 @@ class Engine:
         )
         zdf.write.mode("overwrite").parquet(self._path(table))
         self.distribution[table] = f"zordered:{c1},{c2}:{n_ranges}"
+        self._schemas.pop(table, None)
         self._refresh(table)
 
     # -- ANALYZE / EXPLAIN ---------------------------------------------------
@@ -1030,6 +1067,7 @@ class Engine:
         staging = self._stage(df, table)
         shutil.rmtree(self._path(table))
         os.rename(staging, self._path(table))
+        self._schemas[table] = df.schema
         self._refresh(table)
 
     # -- Zero-copy clone (Delta SHALLOW CLONE semantics) ---------------------
@@ -1059,4 +1097,5 @@ class Engine:
         self.distribution[dst] = self.distribution.get(src, "none")
         if src in self._added_cols:
             self._added_cols[dst] = dict(self._added_cols[src])
+        self._schemas.pop(dst, None)
         self._refresh(dst)

@@ -11,8 +11,9 @@ and stopped:
 - ``file_batches`` is the one-file-per-micro-batch parquet reader, and
   ``stage_stream`` writes a frame as ``n`` files and returns that reader —
   every multi-batch source goes through them;
-- ``run_windowed_stream`` is the only ``start()``: it pins the state
-  partitions, runs the query into a memory table or a ``foreachBatch``
+- ``run_windowed_stream`` is the only ``start()``: it pins one state
+  partition per task slot, so each trigger's stateful stage runs as one
+  wave of tasks, runs the query into a memory table or a ``foreachBatch``
   sink (optionally checkpointed), drains it with ``processAllAvailable``
   and stops it in ``finally``.  It is both the test harness and the
   template for a production kafka-source deployment;
@@ -43,6 +44,9 @@ from qpmodel_spark.queries._util import msum
 
 # one staged source dir per sf_dir per process (avoid temp-dir leak per call)
 _STAGE_DIRS: dict[str, str] = {}
+# the events schema per sf_dir; like _STAGE_DIRS, it assumes the inputs do
+# not change while the process runs
+_EVENTS_SCHEMAS: dict[str, T.StructType] = {}
 # the per-process parent of every scratch_dir, made on first use
 _SCRATCH_ROOT: str | None = None
 
@@ -82,11 +86,16 @@ def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     tz at execution — under a driver session in any other zone the whole
     stream's epochs shift by the zone offset while the DuckDB oracle stays
     naive-UTC.  Every stream reader passes through here, so the pin holds
-    before any streaming query starts.
+    before any streaming query starts.  The footer is read once per
+    ``sf_dir`` per process; the pins are set on every call.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = _EVENTS_SCHEMAS.get(sf_dir)
+    if schema is None:
+        schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+        _EVENTS_SCHEMAS[sf_dir] = schema
+    return schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,14 +149,19 @@ def run_windowed_stream(
     streaming query is started.
 
     The sink is ``foreach_batch`` when given (returns None), else a memory
-    table (returned).  ``spark.sql.shuffle.partitions`` is pinned to 8 while
-    the query runs, sink included, and restored afterwards: a stateful
-    query instantiates one state store per shuffle partition per
-    micro-batch, fixed when the query starts, so a plain session's 200
-    partitions cost ~10 s of setups per bounded run; state partitioning
-    changes parallelism, never results.  The query is drained with ``processAllAvailable`` (a sink
-    failure propagates as ``StreamingQueryException``) and stopped in
-    ``finally``.
+    table (returned).  While the query runs, sink included,
+    ``spark.sql.shuffle.partitions`` is pinned to the task slots
+    (``defaultParallelism``: the local cores, or every executor core on a
+    cluster), and it is restored afterwards.  A stateful query runs one
+    state store per shuffle partition in every trigger, fixed when the
+    query starts, and each store is a task with a fixed cost whatever its
+    rows (a state commit, and for a pandas operator a Python worker's
+    setup).  One partition per slot runs each trigger's stateful stage as
+    one wave: fewer partitions leave slots idle, more run extra waves of
+    that fixed cost, and a plain session's 200 are 200 per trigger.  The
+    state partitioning changes parallelism, never results.  The query is
+    drained with ``processAllAvailable`` (a sink failure propagates as
+    ``StreamingQueryException``) and stopped in ``finally``.
     """
     w = streaming_df.writeStream.outputMode(output_mode)
     if checkpoint is not None:
@@ -159,7 +173,9 @@ def run_windowed_stream(
         name = f"qp_stream_{uuid.uuid4().hex[:8]}"
         w = w.format("memory").queryName(name)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     try:
         q = w.start()
         try:

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pandas as pd
 import pytest
@@ -71,12 +70,12 @@ def test_shared_cte_persists(spark, ctx):
     assert not rev.storageLevel.useMemory
 
 
-def test_engine_create_insert_copy_analyze(spark):
-    eng = Engine(spark)
+def test_engine_create_insert_copy_analyze(spark, tmp_path):
+    eng = Engine(spark, str(tmp_path / "wh"))
     eng.create_table("tnew", "a INT, b STRING", distribution="distributed:a")
     eng.insert_values("tnew", [(1, "x"), (2, "y")])
     # COPY FROM csv with '' → NULL (reference semantics)
-    csv = os.path.join(tempfile.mkdtemp(), "in.csv")
+    csv = str(tmp_path / "in.csv")
     with open(csv, "w") as f:
         f.write("3,z\n4,\n")
     eng.copy_from_csv("tnew", csv, where="a > 2")
@@ -115,8 +114,8 @@ def test_qp_hash_stable(spark):
     assert a == b
 
 
-def test_replicated_table_gets_broadcast(spark):
-    eng = Engine(spark)
+def test_replicated_table_gets_broadcast(spark, tmp_path):
+    eng = Engine(spark, str(tmp_path))
     eng.create_table("dim_rep", "k INT, v STRING", distribution="replicated")
     eng.insert_values("dim_rep", [(1, "a")])
     eng.distribution["dim_rep"] = "replicated"
@@ -127,9 +126,9 @@ def test_replicated_table_gets_broadcast(spark):
     eng.drop_table("dim_rep")
 
 
-def test_sql_script_batch(spark, ctx):
+def test_sql_script_batch(spark, ctx, tmp_path):
     """Statement batches ≙ reference ExecSQLList (stmt.cs:228-270)."""
-    eng = Engine(spark)
+    eng = Engine(spark, str(tmp_path))
     results = eng.sql_script(
         """
         SELECT 1 AS a;
@@ -140,10 +139,10 @@ def test_sql_script_batch(spark, ctx):
     assert [r.collect()[0][0] for r in results] == [1, 25, "AFRICA"]
 
 
-def test_decimal_exact_arithmetic(spark):
+def test_decimal_exact_arithmetic(spark, tmp_path):
     """numeric(p,s) fixture — NIST-style exact decimal assertions
     (reference type system: DataType.cs:204-209, decimal-backed)."""
-    eng = Engine(spark)
+    eng = Engine(spark, str(tmp_path))
     eng.create_table("dec_t", "k INT, amt DECIMAL(9,2)")
     from decimal import Decimal
 
@@ -706,6 +705,98 @@ def test_merge_into_is_one_action_sharing_the_join_exchange(spark, tmp_path):
     assert len(hashed) == 2, plans[0]
     assert spark.table("one").count() == 20
     eng.drop_table("one")
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs that ``fn`` submits from this thread (one job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"qp_jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scan_reads_every_write_path_exactly(spark, tmp_path):
+    """After each write path the Engine's table reads with the same schema
+    and rows as a fresh footer-inferred read of its files, and a table
+    whose schema the Engine recorded is read without a Spark job."""
+    from collections import Counter
+
+    eng = Engine(spark, str(tmp_path))
+
+    def check(t: str) -> None:
+        got = eng.table(t)
+        fresh = spark.read.parquet(eng._path(t))
+        assert got.schema == fresh.schema, (t, got.schema, fresh.schema)
+        assert Counter(map(tuple, got.collect())) == Counter(
+            map(tuple, fresh.collect())
+        ), t
+        assert _jobs_run_by(spark, lambda: eng._read_files(t).schema) == 0, t
+
+    eng.create_table("w", "k int, v int, s string")
+    check("w")
+    eng.create_table("wd", "k int, v int", distribution="distributed:k")
+    check("wd")
+    eng.insert_values("w", [(1, 10, "a"), (2, 20, None)])
+    check("w")
+    eng.insert_values("wd", [(1, 1), (2, 2)])
+    eng.insert_select("w", spark.createDataFrame([(3, 30, "c")], "k int, v int, s string"))
+    check("w")
+    src = spark.createDataFrame([(1, 11, "x"), (9, 90, "z")], "k int, v int, s string")
+    eng.create_table("m", "k int, v int, s string")
+    eng.merge_into("m", src, on="k")  # empty target: append
+    check("m")
+    eng.merge_into("w", src, on="k")  # insert-only: anti-join append
+    check("w")
+    eng.merge_into("w", src, on="k", when_matched_update={"v": "src.v"})  # rewrite
+    check("w")
+    eng.update_set("w", {"v": "v / 2"}, "k = 1")  # widens v to double
+    assert dict(eng.table("w").dtypes)["v"] == "double"
+    check("w")
+    eng.delete_where("w", "k = 2")
+    check("w")
+    eng.add_column("w", "d", "bigint", "7")
+    eng.insert_values("w", [(5, 5.0, "e", None)])
+    eng.update_set("w", {"s": "upper(s)"}, "k = 9")  # materializes d
+    assert "d" in eng.table("w").columns
+    check("w")
+    eng.compact("w")
+    check("w")
+    eng.restore_version("w", 1)
+    check("w")
+    eng.create_partitioned("p", spark.range(6).selectExpr("id", "id % 3 AS g"), "g")
+    check("p")
+    eng.clone_table("w", "wc")
+    check("wc")
+    eng.insert_select("wc", eng.table("w").select("k", "s", "v"))  # other order
+    check("wc")
+
+
+def test_rewrite_merge_reads_recorded_schema(spark, tmp_path):
+    """A rewrite-arm MERGE on an Engine-written table infers no schema: the
+    target read, the rewrite's read and the refresh all use the recorded
+    one, so the MERGE runs only its write's three jobs (two shuffle stages
+    and the write).  A footer inference would add one job per read."""
+    eng = Engine(spark, str(tmp_path))
+    eng.create_table("rw", "k bigint, v bigint")
+    eng.insert_values("rw", [(k, k) for k in range(10)])
+    src = spark.range(40).selectExpr("id % 20 AS k", "id AS v").groupBy("k").agg(
+        F.sum("v").alias("v")
+    )
+    n = _jobs_run_by(
+        spark,
+        lambda: eng.merge_into("rw", src, on="k", when_matched_update={"v": "src.v"}),
+    )
+    assert n == 3, n
+    assert eng.table("rw").count() == 20
 
 
 def test_is_empty_stops_at_first_nonempty_footer(spark, tmp_path, monkeypatch):

@@ -213,7 +213,7 @@ def test_run_windowed_stream_failing_sink_stops_and_restores(spark, tmp_path):
             raise RuntimeError("sink failed on batch 0")
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "13")  # not the pinned 8
+    spark.conf.set("spark.sql.shuffle.partitions", "13")  # not a slot count
     try:
         src = stage_stream(spark, spark.range(10), 2, str(tmp_path / "src"))
         with pytest.raises(StreamingQueryException, match="sink failed on batch 0"):
@@ -225,6 +225,55 @@ def test_run_windowed_stream_failing_sink_stops_and_restores(spark, tmp_path):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_run_windowed_stream_one_state_partition_per_slot(spark, tmp_path):
+    """Every trigger of a stateful query run by run_windowed_stream has one
+    state store per task slot, and the caller's shuffle-partition count is
+    back in place afterwards."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from qpmodel_spark.streaming.stream_runner import stage_stream
+
+    progress = []
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Listener()
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "13")  # not a slot count
+    spark.streams.addListener(listener)
+    try:
+        src = stage_stream(
+            spark, spark.range(100).selectExpr("id % 7 AS k"), 2, str(tmp_path / "src")
+        )
+        out = run_windowed_stream(
+            spark, src.groupBy("k").agg(F.count("*").alias("n")), "update",
+            checkpoint=str(tmp_path / "ckpt"),
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    triggers = [p for p in progress if p.numInputRows > 0]
+    assert len(triggers) == 2, progress
+    slots = spark.sparkContext.defaultParallelism
+    assert [p.stateOperators[0].numStateStoreInstances for p in triggers] == [slots] * 2
+    got = {r.k: r.n for r in out.groupBy("k").agg(F.max("n").alias("n")).collect()}
+    assert got == {k: len(range(k, 100, 7)) for k in range(7)}
 
 
 def test_streaming_upsert_converges_to_batch(spark, tmp_path):
