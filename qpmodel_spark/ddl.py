@@ -181,8 +181,9 @@ class Engine:
         # (table -> {col: (sql_type, default_expr)}); resolved at read time
         # until the next copy-on-write rewrite materializes them
         self._added_cols: dict[str, dict[str, tuple[str, str]]] = {}
-        # table -> schema of the files the Engine last wrote there; _scan
-        # reads with it, so only a table without a record pays inference
+        # table -> schema of the files the Engine last wrote there, set or
+        # dropped by _refresh; _scan reads with it, so only a table without
+        # a record pays inference
         self._schemas: dict[str, StructType] = {}
 
     def _path(self, table: str) -> str:
@@ -228,7 +229,7 @@ class Engine:
         shutil.rmtree(self._path(table), ignore_errors=True)
         self.distribution.pop(table, None)
         self.analyzed.discard(table)
-        self._schemas.pop(table, None)
+        self._schemas.pop(table, None)  # no _refresh: the table is gone
 
     def _route(self, df: DataFrame, table: str, distribution: str | None = None) -> DataFrame:
         distribution = distribution or self.distribution.get(table, "none")
@@ -246,10 +247,18 @@ class Engine:
         ``_append_staged``)."""
         df = self._route(df, table, distribution)
         df.write.mode("overwrite").parquet(self._path(table))
-        self._schemas[table] = df.schema
-        self._refresh(table)
+        self._refresh(table, df.schema)
 
-    def _refresh(self, table: str) -> None:
+    def _refresh(self, table: str, schema: StructType | None = None) -> None:
+        """Re-expose ``table`` after its files changed.  ``schema`` is the
+        schema of the files the caller just wrote, recorded for ``_scan``;
+        without it the record is dropped and the next read infers the
+        schema from the footers.  Every write ends here, so a writer that
+        passes no schema costs one inference job, never a stale read."""
+        if schema is None:
+            self._schemas.pop(table, None)
+        else:
+            self._schemas[table] = schema
         if table in self.analyzed:
             # analyze() dropped the temp view so reads resolve the catalog
             # table (where the CBO stats live); recreating the view here
@@ -272,13 +281,14 @@ class Engine:
     def _scan(self, table: str) -> DataFrame:
         """The table's files, read with the schema the Engine recorded when
         it wrote them; every read of a live table without an ADD COLUMN
-        overlay goes through here.  Every overwrite (``_write``,
-        ``_rewrite``, ``_overwrite_staged``) records the frame it wrote, an
-        append of the same schema keeps the record, and any other write
-        drops it.  Without a record the schema is inferred from the parquet
-        footers, which costs a Spark job, and is recorded.  A scan makes
-        every field nullable whether its schema is given or inferred, so
-        both read identically."""
+        overlay goes through here.  The record is set or dropped by
+        ``_refresh``, which every write ends in: overwrites (``_write``,
+        ``_rewrite``, ``_overwrite_staged``) pass the frame they wrote, an
+        append of the same schema passes the record on, and every other
+        write passes none.  Without a record the schema is inferred from
+        the parquet footers, which costs a Spark job, and is recorded.  A
+        scan makes every field nullable whether its schema is given or
+        inferred, so both read identically."""
         schema = self._schemas.get(table)
         if schema is not None:
             return self.spark.read.schema(schema).parquet(self._path(table))
@@ -348,7 +358,7 @@ class Engine:
         is dropped — exactly Delta/Iceberg column-add semantics.
         """
         self._added_cols.setdefault(table, {})[col] = (sql_type, default)
-        self._refresh(table)
+        self._refresh(table, self._schemas.get(table))  # no file changed
 
     # -- UPDATE / DELETE / COMPACT (copy-on-write rewrites) -----------------
     # The reference parses UPDATE/DELETE but never implements them
@@ -389,8 +399,7 @@ class Engine:
         os.rename(staging, self._path(table))
         # the rewrite materialized any added columns into every file
         self._added_cols.pop(table, None)
-        self._schemas[table] = out.schema
-        self._refresh(table)
+        self._refresh(table, out.schema)
 
     def _append_staged(self, df: DataFrame, table: str, op: str) -> None:
         """Append ``df`` to ``table`` the way ``_rewrite`` replaces it:
@@ -405,12 +414,11 @@ class Engine:
             if f.lstrip(".").startswith("part-"):  # data files and their .crc
                 os.rename(f"{staging}/{f}", f"{self._path(table)}/{f}")
         shutil.rmtree(staging)
+        # files of another schema (nullability aside, which a scan drops)
+        # drop the record: inference picks one file's footer, as it always did
         rec = self._schemas.get(table)
-        if rec is not None and rec.simpleString() != df.schema.simpleString():
-            # files of another schema (nullability aside, which a scan
-            # drops): inference picks one file's footer, as it always did
-            del self._schemas[table]
-        self._refresh(table)
+        same = rec is not None and rec.simpleString() == df.schema.simpleString()
+        self._refresh(table, rec if same else None)
 
     # -- Time travel (versioned snapshots over the same rewrite plan) -------
     # The copy-on-write note above says production layers a versioned table
@@ -550,7 +558,6 @@ class Engine:
             self._added_cols[table] = extras
         else:
             self._added_cols.pop(table, None)
-        self._schemas.pop(table, None)
         self._refresh(table)
 
     def vacuum(self, table: str, keep_last: int = 1) -> int:
@@ -779,8 +786,7 @@ class Engine:
         """
         df.write.mode("overwrite").partitionBy(part_col).parquet(self._path(table))
         self.distribution[table] = f"partitioned:{part_col}"
-        self._schemas.pop(table, None)  # partition column types come from paths
-        self._refresh(table)
+        self._refresh(table)  # partition column types come from the paths
 
     def insert_overwrite_partitions(self, table: str, df: DataFrame) -> None:
         """INSERT OVERWRITE ... PARTITION (dynamic): replace ONLY the
@@ -806,7 +812,6 @@ class Engine:
             .partitionBy(part_col)
             .parquet(self._path(table))
         )
-        self._schemas.pop(table, None)
         self._refresh(table)
 
     # -- Bucketed tables (shuffle-free co-located joins) ---------------------
@@ -827,7 +832,7 @@ class Engine:
             .saveAsTable(table)
         )
         self.distribution[table] = f"bucketed:{key}:{n_buckets}"
-        self._schemas.pop(table, None)
+        self._schemas.pop(table, None)  # no _refresh: a catalog table now
 
     # -- CREATE INDEX (zone-map layout) --------------------------------------
     def create_index(self, table: str, col: str, n_ranges: int = 8) -> None:
@@ -850,7 +855,6 @@ class Engine:
 
         shutil.rmtree(self._path(table))
         shutil.move(tmp, self._path(table))
-        self._schemas.pop(table, None)
         self._refresh(table)
 
     # -- Z-ORDER clustering (multi-column data skipping) ---------------------
@@ -908,7 +912,6 @@ class Engine:
         )
         zdf.write.mode("overwrite").parquet(self._path(table))
         self.distribution[table] = f"zordered:{c1},{c2}:{n_ranges}"
-        self._schemas.pop(table, None)
         self._refresh(table)
 
     # -- ANALYZE / EXPLAIN ---------------------------------------------------
@@ -1067,8 +1070,7 @@ class Engine:
         staging = self._stage(df, table)
         shutil.rmtree(self._path(table))
         os.rename(staging, self._path(table))
-        self._schemas[table] = df.schema
-        self._refresh(table)
+        self._refresh(table, df.schema)
 
     # -- Zero-copy clone (Delta SHALLOW CLONE semantics) ---------------------
     def clone_table(self, src: str, dst: str) -> None:
@@ -1097,5 +1099,4 @@ class Engine:
         self.distribution[dst] = self.distribution.get(src, "none")
         if src in self._added_cols:
             self._added_cols[dst] = dict(self._added_cols[src])
-        self._schemas.pop(dst, None)
         self._refresh(dst)

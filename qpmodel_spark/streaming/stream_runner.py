@@ -12,11 +12,11 @@ and stopped:
   ``stage_stream`` writes a frame as ``n`` files and returns that reader —
   every multi-batch source goes through them;
 - ``run_windowed_stream`` is the only ``start()``: it pins one state
-  partition per task slot, so each trigger's stateful stage runs as one
-  wave of tasks, runs the query into a memory table or a ``foreachBatch``
-  sink (optionally checkpointed), drains it with ``processAllAvailable``
-  and stops it in ``finally``.  It is both the test harness and the
-  template for a production kafka-source deployment;
+  partition per task slot, at most 8, so each trigger's stateful stage
+  runs as one wave of tasks, runs the query into a memory table or a
+  ``foreachBatch`` sink (optionally checkpointed), drains it with
+  ``processAllAvailable`` and stops it in ``finally``.  It is both the
+  test harness and the template for a production kafka-source deployment;
 - ``scratch_dir`` makes the directories a run stages into, checkpoints to
   and keeps its warehouse in, under one root per process that is removed
   at exit.
@@ -151,16 +151,19 @@ def run_windowed_stream(
     The sink is ``foreach_batch`` when given (returns None), else a memory
     table (returned).  While the query runs, sink included,
     ``spark.sql.shuffle.partitions`` is pinned to the task slots
-    (``defaultParallelism``: the local cores, or every executor core on a
-    cluster), and it is restored afterwards.  A stateful query runs one
-    state store per shuffle partition in every trigger, fixed when the
-    query starts, and each store is a task with a fixed cost whatever its
-    rows (a state commit, and for a pandas operator a Python worker's
-    setup).  One partition per slot runs each trigger's stateful stage as
-    one wave: fewer partitions leave slots idle, more run extra waves of
-    that fixed cost, and a plain session's 200 are 200 per trigger.  The
-    state partitioning changes parallelism, never results.  The query is
-    drained with ``processAllAvailable`` (a sink failure propagates as
+    (``defaultParallelism``) but at most 8, and it is restored afterwards.
+    A stateful query runs one state store per shuffle partition in every
+    trigger, fixed when the query starts, and each store is a task with a
+    fixed cost whatever its rows (a state commit, and for a pandas operator
+    a Python worker's setup).  With up to 8 slots this runs each trigger's
+    stateful stage as one wave, no wider than the slots (on a 4-core host,
+    4 stores per trigger instead of 8 cut the stream_mv pass by about a
+    third).  The cap keeps wider hosts at 8 stores per trigger: small
+    triggers gain nothing from more, and a task downstream of a
+    ``coalesce(1)`` walks every store one after another.  A plain
+    session's 200 would be 200 per trigger.  The state partitioning
+    changes parallelism, never results.  The query is drained with
+    ``processAllAvailable`` (a sink failure propagates as
     ``StreamingQueryException``) and stopped in ``finally``.
     """
     w = streaming_df.writeStream.outputMode(output_mode)
@@ -173,9 +176,8 @@ def run_windowed_stream(
         name = f"qp_stream_{uuid.uuid4().hex[:8]}"
         w = w.format("memory").queryName(name)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
+    slots = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(slots, 8)))
     try:
         q = w.start()
         try:

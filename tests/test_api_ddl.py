@@ -783,20 +783,35 @@ def test_scan_reads_every_write_path_exactly(spark, tmp_path):
 def test_rewrite_merge_reads_recorded_schema(spark, tmp_path):
     """A rewrite-arm MERGE on an Engine-written table infers no schema: the
     target read, the rewrite's read and the refresh all use the recorded
-    one, so the MERGE runs only its write's three jobs (two shuffle stages
-    and the write).  A footer inference would add one job per read."""
-    eng = Engine(spark, str(tmp_path))
-    eng.create_table("rw", "k bigint, v bigint")
-    eng.insert_values("rw", [(k, k) for k in range(10)])
-    src = spark.range(40).selectExpr("id % 20 AS k", "id AS v").groupBy("k").agg(
-        F.sum("v").alias("v")
-    )
-    n = _jobs_run_by(
-        spark,
-        lambda: eng.merge_into("rw", src, on="k", when_matched_update={"v": "src.v"}),
-    )
-    assert n == 3, n
-    assert eng.table("rw").count() == 20
+    one.  The same MERGE on an Engine that keeps no record pays a footer
+    inference job for each of the three reads."""
+
+    class Forgetful(dict):
+        def __setitem__(self, key, value):
+            pass
+
+    def merge_jobs(table: str, keep_record: bool) -> int:
+        eng = Engine(spark, str(tmp_path / table))
+        if not keep_record:
+            eng._schemas = Forgetful()
+        eng.create_table(table, "k bigint, v bigint")
+        eng.insert_values(table, [(k, k) for k in range(10)])
+        src = spark.range(40).selectExpr("id % 20 AS k", "id AS v").groupBy(
+            "k"
+        ).agg(F.sum("v").alias("v"))
+        n = _jobs_run_by(
+            spark,
+            lambda: eng.merge_into(
+                table, src, on="k", when_matched_update={"v": "src.v"}
+            ),
+        )
+        assert eng.table(table).count() == 20
+        eng.drop_table(table)
+        return n
+
+    recorded = merge_jobs("rw_rec", keep_record=True)
+    inferred = merge_jobs("rw_inf", keep_record=False)
+    assert inferred - recorded >= 2, (recorded, inferred)
 
 
 def test_is_empty_stops_at_first_nonempty_footer(spark, tmp_path, monkeypatch):

@@ -3,6 +3,8 @@ window results (the reference's stream executor is a stub — ours runs)."""
 
 from __future__ import annotations
 
+import pytest
+
 from qpmodel_spark import registry
 from qpmodel_spark.streaming.stream_runner import (
     read_events_stream,
@@ -227,10 +229,15 @@ def test_run_windowed_stream_failing_sink_stops_and_restores(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
-def test_run_windowed_stream_one_state_partition_per_slot(spark, tmp_path):
+@pytest.mark.parametrize("slots,stores", [(3, 3), (12, 8)])
+def test_run_windowed_stream_one_state_partition_per_slot(
+    spark, tmp_path, monkeypatch, slots, stores
+):
     """Every trigger of a stateful query run by run_windowed_stream has one
-    state store per task slot, and the caller's shuffle-partition count is
-    back in place afterwards."""
+    state store per task slot, at most 8, and the caller's shuffle-partition
+    count is back in place afterwards.  The slot count is faked through
+    ``defaultParallelism``, so the check does not depend on the host."""
+    from pyspark import SparkContext
     from pyspark.sql import functions as F
     from pyspark.sql.streaming import StreamingQueryListener
 
@@ -256,6 +263,9 @@ def test_run_windowed_stream_one_state_partition_per_slot(spark, tmp_path):
     spark.conf.set("spark.sql.shuffle.partitions", "13")  # not a slot count
     spark.streams.addListener(listener)
     try:
+        monkeypatch.setattr(
+            SparkContext, "defaultParallelism", property(lambda sc: slots)
+        )
         src = stage_stream(
             spark, spark.range(100).selectExpr("id % 7 AS k"), 2, str(tmp_path / "src")
         )
@@ -266,12 +276,12 @@ def test_run_windowed_stream_one_state_partition_per_slot(spark, tmp_path):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     finally:
+        monkeypatch.undo()
         spark.streams.removeListener(listener)
         spark.conf.set("spark.sql.shuffle.partitions", before)
     triggers = [p for p in progress if p.numInputRows > 0]
     assert len(triggers) == 2, progress
-    slots = spark.sparkContext.defaultParallelism
-    assert [p.stateOperators[0].numStateStoreInstances for p in triggers] == [slots] * 2
+    assert [p.stateOperators[0].numStateStoreInstances for p in triggers] == [stores] * 2
     got = {r.k: r.n for r in out.groupBy("k").agg(F.max("n").alias("n")).collect()}
     assert got == {k: len(range(k, 100, 7)) for k in range(7)}
 
