@@ -7,6 +7,12 @@ catalog: tables are parquet files named ``{sf_dir}/{table}.parquet``;
 ``register_views`` exposes them as temp views so the SQL surface matches the
 DuckDB oracle's pre-registered views one-to-one.
 
+Table metadata is read from the files themselves: :func:`data_files` is the
+one listing rule for a table directory and :func:`footers` the one parquet
+footer reader, with an explicit unknown result (``None``).  Every footer
+read in the package, and every listing of an Engine table's files, goes
+through them.
+
 Scale note: parquet scans get predicate pushdown, column pruning and
 partition-level parallelism from Catalyst for free; at 100 TB the same
 catalog works over a directory of many files per table (Spark splits by
@@ -15,7 +21,10 @@ catalog works over a directory of many files per table (Spark splits by
 
 from __future__ import annotations
 
+import os
 import weakref
+from typing import Iterable, Iterator, NamedTuple
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,25 +57,19 @@ def fanout(df: DataFrame) -> DataFrame:
     inserts one round-robin exchange sized to the session's shuffle
     parallelism (env-derived via session.py, never a constant).
 
-    SCALE-ADAPTIVE via a metadata-only guard: when the frame reads at
-    least as many files as the target parallelism (a real multi-file table
-    at cluster scale), it is a no-op — no 100 TB corpus pays a gratuitous
-    full-payload shuffle.  (``inputFiles()`` is a listing lookup, ~3 ms;
-    the earlier ``df.rdd.getNumPartitions()`` guard forced a plan->RDD
-    conversion costing 0.1-0.7 s per build, measured r13.)
+    SCALE-ADAPTIVE via metadata-only guards, so no 100 TB corpus pays a
+    gratuitous full-payload shuffle.  It is a no-op when the frame reads
+    at least as many files as the target parallelism (a real multi-file
+    table at cluster scale), or when the files' total bytes divided by
+    ``spark.sql.files.maxPartitionBytes`` reach the target (a few big
+    splittable files already scan as that many tasks).  ``inputFiles()``
+    is a listing lookup (~3 ms), where a ``df.rdd.getNumPartitions()``
+    guard forces a plan->RDD conversion costing 0.1-0.7 s per build.
 
-    r14 (judge r13 item #3): the guard is also BYTES-aware — a table
-    stored as a FEW big splittable parquet files (say 50 x 2 GB) fails the
-    file-count test yet already scans as hundreds of tasks under
-    ``spark.sql.files.maxPartitionBytes``; shuffling its full payload
-    would be pure cost.  When the listed files' total size divided by
-    maxPartitionBytes reaches the target parallelism, fanout is a no-op
-    too.  File sizes come from the same local listing metadata; paths
-    whose size cannot be read (object-store URIs in this local harness)
-    simply don't contribute, which only ever errs toward the old
-    behavior.  The single-row-group local testdata (one ~2-20 MB file per
-    table) stays far below both thresholds, so every measured local win
-    is intact.
+    Unknown size — a frame that is not file-backed, or any file whose
+    footer :func:`footers` cannot read (an object-store URI) — fans out:
+    a needless shuffle costs time, while one task over a big input may
+    never finish.
 
     NOT applied centrally: an A/B over 20 registry entries measured the
     extra exchange+stage as a net LOSS on every light entry (+0.2-0.7 s
@@ -81,15 +84,15 @@ def fanout(df: DataFrame) -> DataFrame:
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         files = df.inputFiles()
-        if len(files) >= target:
-            return df
-        max_split = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        )
-        if max_split > 0 and _listing_bytes(files) // max_split >= target:
-            return df  # few big files, but the scan still splits enough
     except Exception:
-        pass  # non-file-backed frame: fan out unconditionally
+        files = []  # not file-backed: size unknown
+    if len(files) >= target:
+        return df
+    stats = list(footers(files))
+    max_split = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    if stats and None not in stats and max_split > 0:
+        if sum(s.bytes for s in stats) // max_split >= target:
+            return df  # few big files, but the scan still splits enough
     return df.repartition(target)
 
 
@@ -105,20 +108,67 @@ def _parse_bytes(v: str) -> int:
     return int(s.rstrip("b") or 0)
 
 
-def _listing_bytes(files: list[str]) -> int:
-    """Total size of the listed input files (local paths / file: URIs;
-    unreadable entries contribute 0, erring toward fanning out)."""
-    import os as _os
-    from urllib.parse import urlparse as _urlparse
+class Footer(NamedTuple):
+    """What one parquet file's footer says about it (``bytes`` is the
+    file's size on disk, the unit ``maxPartitionBytes`` splits by)."""
 
-    total = 0
+    rows: int
+    bytes: int
+    columns: tuple[str, ...]
+
+
+def data_files(path: str) -> list[str]:
+    """The parquet data files of a table directory, at any depth (hive
+    partition directories included), by the rule Spark's file index
+    applies: names starting with ``.`` are skipped, and so are names
+    starting with ``_`` unless they hold ``=`` (``_SUCCESS``, ``.crc``
+    files, ``_temporary`` write directories)."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not hidden(d))
+        out += [
+            os.path.join(root, f)
+            for f in sorted(files)
+            if f.endswith(".parquet") and not hidden(f)
+        ]
+    return out
+
+
+def footers(files: Iterable[str]) -> Iterator[Footer | None]:
+    """Read the footer of each file in ``files`` — what ``inputFiles()``
+    returns, or :func:`data_files` of a table directory — lazily, one file
+    per step, so a caller can stop at the first file that answers it.  No
+    Spark job runs.
+
+    Yields ``None`` (unknown) for a file whose footer cannot be read here:
+    a URI with a scheme other than ``file:`` or with a remote host (an
+    ``s3a://bucket/x`` URI is never read as the local file ``/x``), or a
+    local file that is gone or is not parquet.  Each caller states its
+    rule for unknown, and each errs toward the choice that stays safe at
+    scale.  No Hadoop FileSystem is consulted: every caller either reads
+    the Engine's local warehouse or has that safe branch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     for f in files:
-        path = _urlparse(f).path if "://" in f else f
-        try:
-            total += _os.path.getsize(path)
-        except OSError:
-            pass
-    return total
+        url = urlparse(f)
+        footer = None
+        if url.scheme in ("", "file") and url.netloc in ("", "localhost"):
+            path = unquote(url.path) if url.scheme else f
+            try:
+                with pq.ParquetFile(path) as pf:
+                    footer = Footer(
+                        pf.metadata.num_rows,
+                        os.path.getsize(path),
+                        tuple(pf.schema_arrow.names),
+                    )
+            except (OSError, pa.ArrowException):  # gone, or not parquet
+                pass
+        yield footer
 
 
 def table_path(sf_dir: str, name: str) -> str:

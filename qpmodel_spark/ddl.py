@@ -25,12 +25,19 @@ distribution column avoid the shuffle entirely.
 
 from __future__ import annotations
 
+import json
+import os
 import re
+import shutil
 import tempfile
+import time
+import uuid
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from qpmodel_spark.catalog import data_files, footers
 
 
 def explain_string(df: DataFrame, mode: str = "formatted") -> str:
@@ -166,6 +173,28 @@ def with_row_observer(df: DataFrame, name: str = "rows"):
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+def _place_tree(src: str, dst: str, move: bool = False) -> int:
+    """Put every file under ``src`` at the same relative path under ``dst``
+    and return how many there were: moved when ``move``, else hard-linked
+    (copied where links fail: cross-device, or a filesystem without
+    links).  Parquet files are immutable, so a link is a snapshot."""
+    n = 0
+    for root, _dirs, files in os.walk(src):
+        droot = os.path.normpath(os.path.join(dst, os.path.relpath(root, src)))
+        os.makedirs(droot, exist_ok=True)
+        for f in files:
+            s, d = os.path.join(root, f), os.path.join(droot, f)
+            if move:
+                os.rename(s, d)
+            else:
+                try:
+                    os.link(s, d)
+                except OSError:
+                    shutil.copy2(s, d)
+            n += 1
+    return n
+
+
 class Engine:
     """Statement-level surface over a parquet warehouse."""
 
@@ -190,20 +219,13 @@ class Engine:
         return f"{self.warehouse}/{table}"
 
     def _is_empty(self, table: str) -> bool:
-        """True iff the table's parquet files hold zero rows — a pure
-        footer-metadata check (no Spark job; the same information a
-        manifest-based format holds per file) that stops at the first
-        file holding a row.  Returns False on any read problem, so
-        callers fall back to the general path."""
-        import glob as _glob
-
-        try:
-            import pyarrow.parquet as _pq
-
-            files = _glob.glob(f"{self._path(table)}/**/*.parquet", recursive=True)
-            return not any(_pq.ParquetFile(f).metadata.num_rows > 0 for f in files)
-        except Exception:
-            return False
+        """True iff the table's parquet files hold zero rows — a footer
+        check (no Spark job; the same information a manifest-based format
+        holds per file) that stops at the first file holding a row.  A
+        footer :func:`catalog.footers` cannot read counts as not empty, so
+        the caller takes its general path."""
+        files = data_files(self._path(table))
+        return all(s is not None and s.rows == 0 for s in footers(files))
 
     # -- CREATE / DROP ------------------------------------------------------
     def create_table(
@@ -221,8 +243,6 @@ class Engine:
         self.distribution[table] = distribution or "none"
 
     def drop_table(self, table: str) -> None:
-        import shutil
-
         self.spark.catalog.dropTempView(table)
         # also clear catalog entries left by analyze()/create_bucketed()
         self.spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -307,24 +327,23 @@ class Engine:
         grouped by which overlay columns their footer schema carries and
         each group is read once; the footer scan is an O(files) metadata
         pass, the same information a manifest-based format (Delta/Iceberg)
-        would hold per file at 100 TB."""
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
+        would hold per file at 100 TB.  A footer that cannot be read
+        raises: without its column names the file cannot be grouped."""
 
         def dflt(sql_type: str, default: str):
             return F.expr(default).cast(sql_type)
 
-        files = _glob.glob(f"{path}/**/*.parquet", recursive=True)
+        files = data_files(path)
         if not files:  # empty table: schema only, every overlay col absent
             df = self.spark.read.parquet(path)
             for col, (sql_type, default) in extras.items():
                 df = df.withColumn(col, dflt(sql_type, default))
             return df
         groups: dict[frozenset, list[str]] = {}
-        for f in files:
-            names = set(_pq.ParquetFile(f).schema_arrow.names)
-            key = frozenset(c for c in extras if c in names)
+        for f, footer in zip(files, footers(files)):
+            if footer is None:
+                raise ValueError(f"cannot read the parquet footer of {f}")
+            key = frozenset(c for c in extras if c in footer.columns)
             groups.setdefault(key, []).append(f)
         parts = []
         for present, flist in groups.items():
@@ -372,15 +391,16 @@ class Engine:
     # format on the identical rewrite plan.
 
     def _stage(self, df: DataFrame, table: str) -> str:
-        """Write ``df`` (routed like ``table``) to a fresh staging dir and
-        return it.  A failed write removes the dir, so nothing of it stays
-        in the warehouse."""
-        import shutil
-        import uuid
-
+        """Write ``df`` (routed and partitioned like ``table``) to a fresh
+        staging dir and return it.  A failed write removes the dir, so
+        nothing of it stays in the warehouse."""
         staging = f"{self.warehouse}/.staging_{table}_{uuid.uuid4().hex[:8]}"
+        writer = self._route(df, table).write
+        dist = self.distribution.get(table, "")
+        if dist.startswith("partitioned:"):
+            writer = writer.partitionBy(dist.split(":", 1)[1])
         try:
-            self._route(df, table).write.parquet(staging)
+            writer.parquet(staging)
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
@@ -389,9 +409,6 @@ class Engine:
     def _rewrite(self, table: str, transform, op: str = "rewrite") -> None:
         """Stage ``transform(table)``, then snapshot, then swap: a write
         that fails leaves the table and its history untouched."""
-        import os
-        import shutil
-
         out = transform(self._read_files(table))  # overlay included
         staging = self._stage(out, table)
         self._snapshot(table, op)
@@ -403,16 +420,13 @@ class Engine:
 
     def _append_staged(self, df: DataFrame, table: str, op: str) -> None:
         """Append ``df`` to ``table`` the way ``_rewrite`` replaces it:
-        stage, snapshot, then move the staged part files in.  The existing
-        files are never touched, and a failed write leaves no trace."""
-        import os
-        import shutil
-
+        stage, snapshot, then move every staged file to the same relative
+        path in the table, so a partitioned table's rows land in their
+        ``col=value`` directories.  The existing files are never touched,
+        and a failed write leaves no trace."""
         staging = self._stage(df, table)
         self._snapshot(table, op)
-        for f in os.listdir(staging):
-            if f.lstrip(".").startswith("part-"):  # data files and their .crc
-                os.rename(f"{staging}/{f}", f"{self._path(table)}/{f}")
+        _place_tree(staging, self._path(table), move=True)
         shutil.rmtree(staging)
         # files of another schema (nullability aside, which a scan drops)
         # drop the record: inference picks one file's footer, as it always did
@@ -437,29 +451,11 @@ class Engine:
     def _snapshot(self, table: str, op: str) -> int:
         """Archive the table's CURRENT state as the next version; return its
         version number.  Called before every mutation (and by snapshot())."""
-        import json
-        import os
-        import shutil
-        import time
-
         vroot = self._versions_dir(table)
         os.makedirs(vroot, exist_ok=True)
-        log_path = f"{vroot}/log.json"
-        log = json.loads(open(log_path).read()) if os.path.exists(log_path) else []
+        log = self._version_log(table)
         v = len(log)
-        vdir = f"{vroot}/v{v}"
-        n_files = 0
-        src_root = self._path(table)
-        for root, _dirs, files in os.walk(src_root):
-            rel = os.path.relpath(root, src_root)
-            dst_root = os.path.join(vdir, rel) if rel != "." else vdir
-            os.makedirs(dst_root, exist_ok=True)
-            for f in files:
-                try:
-                    os.link(os.path.join(root, f), os.path.join(dst_root, f))
-                except OSError:  # cross-device / FS without links
-                    shutil.copy2(os.path.join(root, f), os.path.join(dst_root, f))
-                n_files += 1
+        n_files = _place_tree(self._path(table), f"{vroot}/v{v}")
         log.append(
             {
                 "version": v,
@@ -469,25 +465,25 @@ class Engine:
                 # schema-evolution overlay active when this version was
                 # archived — read_version/restore_version reinstate it so
                 # an ALTER-added column never silently disappears from a
-                # snapshot that included it (r3 advice)
+                # snapshot that included it
                 "added_cols": {
                     c: list(td) for c, td in self._added_cols.get(table, {}).items()
                 }
                 or None,
             }
         )
-        with open(log_path, "w") as fh:
+        with open(f"{vroot}/log.json", "w") as fh:
             json.dump(log, fh)
         return v
 
     def _version_log(self, table: str) -> list[dict]:
-        import json
-        import os
-
+        """The table's version log, oldest first; [] before its first
+        snapshot.  The only reader of ``log.json``."""
         log_path = f"{self._versions_dir(table)}/log.json"
         if not os.path.exists(log_path):
             return []
-        return json.loads(open(log_path).read())
+        with open(log_path) as fh:
+            return json.load(fh)
 
     def snapshot(self, table: str, note: str = "manual") -> int:
         """Explicit named snapshot of the current state (no mutation)."""
@@ -496,22 +492,15 @@ class Engine:
     def history(self, table: str) -> DataFrame:
         """Version log (≙ Delta DESCRIBE HISTORY): one row per archived
         version; version N is the state BEFORE the N-th logged operation."""
-        import json
-        import os
-
-        log_path = f"{self._versions_dir(table)}/log.json"
-        log = json.loads(open(log_path).read()) if os.path.exists(log_path) else []
+        log = self._version_log(table)
         return self.spark.createDataFrame(
-            [(e["version"], e["op"], float(e["ts"]), e["n_files"]) for e in log]
-            or [],
+            [(e["version"], e["op"], float(e["ts"]), e["n_files"]) for e in log],
             "version int, op string, ts double, n_files int",
         )
 
     def read_version(self, table: str, version: int) -> DataFrame:
         """Time-travel read: the table as of archived ``version``, including
         the ADD COLUMN overlay that was active at archive time."""
-        import os
-
         vdir = f"{self._versions_dir(table)}/v{version}"
         if not os.path.isdir(vdir):
             raise ValueError(f"no snapshot v{version} for table '{table}'")
@@ -532,25 +521,12 @@ class Engine:
     def restore_version(self, table: str, version: int) -> None:
         """Roll the live table back to ``version`` (itself logged, so a
         restore is undoable — Delta RESTORE semantics)."""
-        import os
-        import shutil
-
         vdir = f"{self._versions_dir(table)}/v{version}"
         if not os.path.isdir(vdir):
             raise ValueError(f"no snapshot v{version} for table '{table}'")
         self._snapshot(table, f"restore:v{version}")
-        live = self._path(table)
-        shutil.rmtree(live)
-        os.makedirs(live)
-        for root, _dirs, files in os.walk(vdir):
-            rel = os.path.relpath(root, vdir)
-            dst_root = os.path.join(live, rel) if rel != "." else live
-            os.makedirs(dst_root, exist_ok=True)
-            for f in files:
-                try:
-                    os.link(os.path.join(root, f), os.path.join(dst_root, f))
-                except OSError:
-                    shutil.copy2(os.path.join(root, f), os.path.join(dst_root, f))
+        shutil.rmtree(self._path(table))
+        _place_tree(vdir, self._path(table))
         # reinstate the ADD COLUMN overlay as of that version, so a column
         # added before the snapshot survives the rollback
         extras = self._version_overlay(table, version)
@@ -564,20 +540,15 @@ class Engine:
         """Drop all but the last ``keep_last`` snapshots; returns how many
         were removed.  Bounds snapshot storage (hardlinked files free their
         space once the last referencing version is vacuumed)."""
-        import json
-        import os
-        import shutil
-
         vroot = self._versions_dir(table)
-        log_path = f"{vroot}/log.json"
-        if not os.path.exists(log_path):
+        log = self._version_log(table)
+        if not log:
             return 0
-        log = json.loads(open(log_path).read())
         cut = [e for e in log if e["version"] < len(log) - keep_last]
         for e in cut:
             shutil.rmtree(f"{vroot}/v{e['version']}", ignore_errors=True)
             e["vacuumed"] = True
-        with open(log_path, "w") as fh:
+        with open(f"{vroot}/log.json", "w") as fh:
             json.dump(log, fh)
         return len(cut)
 
@@ -615,20 +586,18 @@ class Engine:
         self._rewrite(table, transform, op="update")
 
     def compact(self, table: str, target_files: int = 1) -> tuple[int, int]:
-        """Rewrite a table into ``target_files`` parquet files.
+        """Rewrite a table into ``target_files`` parquet files (per
+        partition directory, for a partitioned table).
 
         The small-files problem is the dominant failure mode of streaming
         sinks and fine-grained inserts at scale (every file is a task +
         a footer read + a namenode entry).  Returns (files_before,
-        files_after).  coalesce (not repartition) — no shuffle, just
-        fewer write tasks.
+        files_after), both counted by :func:`catalog.data_files`.
+        coalesce (not repartition) — no shuffle, just fewer write tasks.
         """
-        import glob
-
-        count = lambda: len(glob.glob(f"{self._path(table)}/*.parquet"))  # noqa: E731
-        before = count()
+        before = len(data_files(self._path(table)))
         self._rewrite(table, lambda df: df.coalesce(target_files), op="compact")
-        return before, count()
+        return before, len(data_files(self._path(table)))
 
     def merge_into(
         self,
@@ -684,7 +653,7 @@ class Engine:
         from pyspark.errors import SparkRuntimeException
         from pyspark.sql import Window
 
-        tgt = self._scan(table)
+        tgt = self._read_files(table)  # ADD COLUMN overlay included
         cols = tgt.columns
         tgt_types = {f.name: f.dataType for f in tgt.schema.fields}
         src_types = {f.name: f.dataType for f in source.schema.fields}
@@ -709,9 +678,7 @@ class Engine:
             src_only = df[on].isNull()
             # expression context: target cols by name, source as src.<col>
             def rewrite_expr(e: str):
-                import re as _re
-
-                return F.expr(_re.sub(r"\bsrc\.(\w+)", r"__src_\1", e))
+                return F.expr(re.sub(r"\bsrc\.(\w+)", r"__src_\1", e))
 
             # NULL delete-condition = not satisfied = keep (SQL semantics)
             keep = ~(
@@ -851,8 +818,6 @@ class Engine:
         clustered = df.repartitionByRange(n_ranges, F.col(col)).sortWithinPartitions(col)
         tmp = self._path(f"__reindex_{table}")
         clustered.write.mode("overwrite").parquet(tmp)
-        import shutil
-
         shutil.rmtree(self._path(table))
         shutil.move(tmp, self._path(table))
         self._refresh(table)
@@ -1064,9 +1029,6 @@ class Engine:
         """Overwrite ``table`` with a plan that READS from it: stage the
         result first (Spark cannot overwrite a path it is scanning), then
         swap — the _rewrite discipline without the snapshot."""
-        import os
-        import shutil
-
         staging = self._stage(df, table)
         shutil.rmtree(self._path(table))
         os.rename(staging, self._path(table))
@@ -1081,21 +1043,9 @@ class Engine:
         is copy-on-write (staged rewrite or new appended files) — existing
         linked files are never modified in place.  The dev/test-sandbox
         primitive over a petabyte table."""
-        import os
-        import shutil
-
-        src_root, dst_root = self._path(src), self._path(dst)
-        if os.path.exists(dst_root):
+        if os.path.exists(self._path(dst)):
             raise ValueError(f"table '{dst}' already exists")
-        for root, _dirs, files in os.walk(src_root):
-            rel = os.path.relpath(root, src_root)
-            droot = os.path.join(dst_root, rel) if rel != "." else dst_root
-            os.makedirs(droot, exist_ok=True)
-            for f in files:
-                try:
-                    os.link(os.path.join(root, f), os.path.join(droot, f))
-                except OSError:
-                    shutil.copy2(os.path.join(root, f), os.path.join(droot, f))
+        _place_tree(self._path(src), self._path(dst))
         self.distribution[dst] = self.distribution.get(src, "none")
         if src in self._added_cols:
             self._added_cols[dst] = dict(self._added_cols[src])

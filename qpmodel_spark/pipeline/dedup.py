@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from qpmodel_spark.catalog import footers
 from qpmodel_spark.pipeline._util import (
     BIGRAMS_DUCK,
     BIGRAMS_SPARK,
@@ -2455,18 +2456,19 @@ def pipeline_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GEMM drop kernel with the default.  The dedup semantics — every clone
     drops, every base survives — are codebook-invariant because clones
     quantize identically and always co-cluster (pinned by
-    test_semdedup_kmeans_codebook_same_drops).  N comes from the parquet
-    footer (driver-local metadata read — no Spark job).  The kernel's GEMM
-    block size is tunable via spark.conf `qpmodel.semdedup.block` (tests
-    exercise chunk boundaries with a tiny block over a skewed cluster).
+    test_semdedup_kmeans_codebook_same_drops).  N is the base corpus's
+    row count, summed from the embeddings scan's parquet footers
+    (:func:`catalog.footers`, no Spark job); when any footer is unknown
+    (an object-store URI), N is an exact ``count()`` — one job, never a
+    guessed K.  The kernel's GEMM block size is tunable via spark.conf
+    `qpmodel.semdedup.block` (tests exercise chunk boundaries with a tiny
+    block over a skewed cluster).
     """
     import math
 
-    import pyarrow.parquet as _pq
-
-    from qpmodel_spark.catalog import table_path
-
-    n_base = _pq.read_metadata(table_path(sf_dir, "embeddings")).num_rows
+    base = t(spark, sf_dir, "embeddings")
+    stats = list(footers(base.inputFiles()))
+    n_base = sum(s.rows for s in stats) if stats and None not in stats else base.count()
     try:
         k = int(spark.conf.get("qpmodel.semdedup.k"))
         if k <= 0:
@@ -2480,7 +2482,7 @@ def pipeline_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         block = int(spark.conf.get("qpmodel.semdedup.block"))
     except Exception:
         block = _SEMDEDUP_BLOCK
-    emb = with_clones(t(spark, sf_dir, "embeddings"), "vec_id")
+    emb = with_clones(base, "vec_id")
     qv_expr = QV127_EXPR  # r13: scale-hoisted quantize grid (_util)
     q = emb.select("vec_id", F.expr(qv_expr).alias("qv"))
     import numpy as np

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from qpmodel_spark.catalog import footers
 from qpmodel_spark.queries._util import t
 from qpmodel_spark.registry import register
 
@@ -104,29 +105,24 @@ _ASOF_MIN_ROWS_PER_TASK = 50_000
 
 def _asof_partitions(spark: SparkSession, df: DataFrame) -> int:
     """Size-derived partition count for the mapInPandas as-of join: input
-    row count from parquet FOOTER metadata (no Spark job; the pre-filter
+    row count from the parquet footers (no Spark job; the pre-filter
     count upper-bounds the filtered rows, erring toward more partitions),
     divided by the per-task row budget, with a core-spread floor for
     mid-size inputs.
 
-    When the row count cannot be known — no file listing, or a footer that
-    cannot be read (object-store URI, file gone since listing) — it
-    returns the session's ``spark.sql.shuffle.partitions``: each task
-    holds its whole partition in one pandas frame, so an input of unknown
-    size must never collapse onto one task."""
+    Unknown size — no file listing, or any file :func:`catalog.footers`
+    cannot read (object-store URI, file gone since listing) — returns the
+    session's ``spark.sql.shuffle.partitions``: each task holds its whole
+    partition in one pandas frame, so an input of unknown size must never
+    collapse onto one task."""
     try:
-        import pyarrow.parquet as _pq
-        from urllib.parse import urlparse as _urlparse
-
         files = df.inputFiles()
-        n_rows = sum(
-            _pq.ParquetFile(_urlparse(f).path if "://" in f else f).metadata.num_rows
-            for f in files
-        )
     except Exception:
         files = []
-    if not files:
+    stats = list(footers(files))
+    if not stats or None in stats:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_rows = sum(s.rows for s in stats)
     cores = spark.sparkContext.defaultParallelism
     p = max(1, -(-n_rows // _ASOF_ROWS_PER_TASK))
     return max(p, min(cores, -(-n_rows // _ASOF_MIN_ROWS_PER_TASK)))
@@ -139,27 +135,27 @@ def asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     window functions express (e.g. tolerance bands, nearest-rather-than-
     backward).
 
-    r13 optimization (guide §4): the per-user ``applyInPandas`` form paid
-    the Python boundary once per GROUP — ~3.3 ms of Arrow-slice + pandas
-    frame construction per user, 5 s for a trivial function over the
-    1,500 users at sf0.1 before merge_asof even ran.  ``mapInPandas``
-    over a user-repartitioned frame crosses the boundary once per
-    PARTITION and runs ONE vectorized ``merge_asof(by="user_id")`` per
-    partition — pandas-documented to equal the per-group backward merge,
-    so values are identical (measured 11.7 s -> see OPTIMIZATION_r13.md).
+    The per-user ``applyInPandas`` form paid the Python boundary once per
+    GROUP — ~3.3 ms of Arrow-slice + pandas frame construction per user,
+    5 s for a trivial function over the 1,500 users at sf0.1 before
+    merge_asof even ran.  ``mapInPandas`` over a user-repartitioned frame
+    crosses the boundary once per PARTITION and runs ONE vectorized
+    ``merge_asof(by="user_id")`` per partition — pandas-documented to
+    equal the per-group backward merge, so values are identical
+    (OPTIMIZATION_r13.md).
 
-    r14 (judge r13 item #2, guide §5): the per-partition function
-    concatenates its whole partition into ONE pandas frame (merge_asof
-    needs every row of a user present, and Arrow batch boundaries can
-    split a user), so per-task memory is bounded by partition size — and
-    a bare ``repartition("user_id")`` at the session's default partition
-    count put ~1/200th of the table in one task at any scale.  The
-    partition count is now SIZE-DERIVED the loop_shuffle_partitions way:
-    footer-metadata row count / _ASOF_ROWS_PER_TASK (~40 MB of pandas at
-    5 narrow columns), floored at the core count — per-task bytes are
-    bounded by construction while small inputs keep whole-machine
-    parallelism.  Values are partition-independent (each user's rows
-    land in exactly one partition under hash repartition for ANY count).
+    The per-partition function concatenates its whole partition into ONE
+    pandas frame (merge_asof needs every row of a user present, and Arrow
+    batch boundaries can split a user), so per-task memory is bounded by
+    partition size — and a bare ``repartition("user_id")`` at the
+    session's default partition count would put ~1/200th of the table in
+    one task at any scale.  The partition count is therefore SIZE-DERIVED
+    (:func:`_asof_partitions`): footer row count /
+    _ASOF_ROWS_PER_TASK (~40 MB of pandas at 5 narrow columns), spread
+    over the cores for mid-size inputs — per-task bytes are bounded by
+    construction while small inputs keep whole-machine parallelism.
+    Values are partition-independent (each user's rows land in exactly
+    one partition under hash repartition for ANY count).
     """
     import pandas as pd
 

@@ -886,3 +886,63 @@ def test_fanout_bytes_parser():
     assert _parse_bytes("64k") == 64 << 10
     assert _parse_bytes("1.5g") == 3 << 29
     assert _parse_bytes("0.5m") == 1 << 19
+
+
+def test_merge_rewrite_keeps_add_column_overlay(spark, tmp_path):
+    """A rewrite MERGE on a table with an ADD COLUMN overlay keeps the added
+    column: the target's columns include the overlay, and a source that
+    lacks an added column fails the way one lacking a file column does."""
+    from pyspark.errors import AnalysisException
+
+    eng = Engine(spark, str(tmp_path))
+    eng.create_table("t", "k int, v int")
+    eng.insert_values("t", [(1, 1)])
+    eng.insert_values("t", [(2, 2)])
+    eng.add_column("t", "d", "int", "7")
+    src = spark.createDataFrame([(1, 10, 0)], "k int, v int, d int")
+    eng.merge_into("t", src, on="k", when_matched_update={"v": "src.v"})
+    back = spark.table("t")
+    assert back.columns == ["k", "v", "d"]
+    assert sorted(tuple(r) for r in back.collect()) == [(1, 10, 7), (2, 2, 7)]
+
+    eng.add_column("t", "e", "int")
+    for missing, cols in (("e", "k int, v int, d int"), ("v", "k int, d int, e int")):
+        src = spark.createDataFrame([(3, 3, 3)], cols)
+        with pytest.raises(AnalysisException, match=f"__src_{missing}"):
+            eng.merge_into("t", src, on="k")
+    assert sorted(tuple(r) for r in spark.table("t").collect()) == [
+        (1, 10, 7, None),
+        (2, 2, 7, None),
+    ]
+    eng.drop_table("t")
+
+
+def test_partitioned_table_writes_keep_partition_directories(spark, tmp_path):
+    """Inserts into a partitioned table land in its ``col=value``
+    directories (an existing partition and a new one), and the rewrites
+    (delete, compact) keep that layout; compact counts files at any depth."""
+    from qpmodel_spark.catalog import data_files
+
+    eng = Engine(spark, str(tmp_path))
+    eng.create_partitioned("p", spark.range(6).selectExpr("id", "id % 3 AS g"), "g")
+    eng.insert_values("p", [(9, 0), (10, 5)])
+
+    def rows():
+        return sorted(tuple(r) for r in spark.table("p").collect())
+
+    def dirs():
+        return sorted({os.path.basename(os.path.dirname(f)) for f in data_files(eng._path("p"))})
+
+    assert rows() == [(0, 0), (1, 1), (2, 2), (3, 0), (4, 1), (5, 2), (9, 0), (10, 5)]
+    assert dirs() == ["g=0", "g=1", "g=2", "g=5"]
+
+    eng.delete_where("p", "id = 4")
+    assert rows() == [(0, 0), (1, 1), (2, 2), (3, 0), (5, 2), (9, 0), (10, 5)]
+    assert dirs() == ["g=0", "g=1", "g=2", "g=5"]
+
+    before = len(data_files(eng._path("p")))
+    assert before > 4
+    assert eng.compact("p", 1) == (before, 4)
+    assert dirs() == ["g=0", "g=1", "g=2", "g=5"]
+    assert rows() == [(0, 0), (1, 1), (2, 2), (3, 0), (5, 2), (9, 0), (10, 5)]
+    eng.drop_table("p")
